@@ -173,10 +173,8 @@ object Bench {
       val ti = System.nanoTime()
       pipe.init(seeds)
       val initSecs = (System.nanoTime() - ti) / 1e9
-      CrawlPipeline.trace(ti, s"bench init n=${seeds.size}")
       val t0 = System.nanoTime()
       pipe.run(maxWaves = 30)
-      CrawlPipeline.trace(t0, "bench run (timed)")
       val fetched = new IceLite(root).tableStat("fetchlog").map(_._1).getOrElse(0L)
       val secs = (System.nanoTime() - t0) / 1e9
       (fetched, secs, initSecs)

@@ -106,11 +106,8 @@ class IceLite(val root: String) {
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.traverse(deltas) { case (table, df) =>
         Future {
-          val t0 = System.nanoTime()
           val dir = Paths.get(root, table, s"d$id").toString
           df.write.mode("overwrite").parquet(dir)
-          if (sys.env.get("SPARK_GRAFT_TRACE").contains("1"))
-            System.err.println(f"[icelite-trace] write $table: ${(System.nanoTime() - t0) / 1e9}%.2fs")
           table -> dir
         }
       }, Duration.Inf)
@@ -187,17 +184,25 @@ class IceLite(val root: String) {
     }
   }
 
-  /** Read a table as of a snapshot (default: head). Empty-with-schema if
-    * the table has no data at that snapshot. */
+  /** Read a table as of a snapshot (default: head). With a `schema` the
+    * scan is bound to it and no Spark job runs to infer one from the
+    * footers; a table with no data at that snapshot then reads as an
+    * empty DataFrame of that schema. */
   def read(spark: SparkSession, table: String, snapshotId: Option[Long] = None,
-           emptySchema: Option[StructType] = None): DataFrame = {
+           schema: Option[StructType] = None): DataFrame = {
     val snap = snapshotId.orElse(currentSnapshotId)
     val dirs = snap.map(manifest(_).tables.getOrElse(table, Seq.empty)).getOrElse(Seq.empty)
-    if (dirs.isEmpty) {
-      val schema = emptySchema.getOrElse(
-        throw new IllegalArgumentException(s"table $table absent at snapshot $snap and no schema given"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else spark.read.parquet(dirs: _*)
+    scan(spark, dirs, schema, s"table $table absent at snapshot $snap and no schema given")
+  }
+
+  /** Parquet scan over `dirs`, schema-bound when one is given. */
+  private def scan(spark: SparkSession, dirs: Seq[String], schema: Option[StructType],
+                   emptyError: => String): DataFrame = (dirs, schema) match {
+    case (Seq(), None) => throw new IllegalArgumentException(emptyError)
+    case (Seq(), Some(s)) =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    case (_, Some(s)) => spark.read.schema(s).parquet(dirs: _*)
+    case (_, None) => spark.read.parquet(dirs: _*)
   }
 
   def commitMeta(snapshotId: Long): Map[String, String] = manifest(snapshotId).meta
@@ -255,10 +260,11 @@ class IceLite(val root: String) {
     * A compaction REWRITES dir history (prior dirs are replaced by a
     * c-dir whose rows duplicate theirs), so an incremental read whose
     * window crosses a compaction would double-count; that case is
-    * refused with IllegalStateException rather than answered wrong. */
+    * refused with IllegalStateException rather than answered wrong.
+    * `schema` binds the scan exactly as in [[read]]. */
   def readIncremental(spark: SparkSession, table: String, fromId: Long,
                       toId: Option[Long] = None,
-                      emptySchema: Option[StructType] = None): DataFrame = {
+                      schema: Option[StructType] = None): DataFrame = {
     val to = toId.orElse(currentSnapshotId).getOrElse(
       throw new IllegalArgumentException("no snapshots committed"))
     val fromDirs = manifest(fromId).tables.getOrElse(table, Seq.empty).toSet
@@ -267,12 +273,8 @@ class IceLite(val root: String) {
     if (dropped.nonEmpty)
       throw new IllegalStateException(
         s"snapshots $fromId..$to rewrite $table dirs (compaction?): ${dropped.mkString(",")}")
-    val newDirs = toDirs.filterNot(fromDirs)
-    if (newDirs.isEmpty) {
-      val schema = emptySchema.getOrElse(
-        throw new IllegalArgumentException(s"no new $table dirs in $fromId..$to and no schema given"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else spark.read.parquet(newDirs: _*)
+    scan(spark, toDirs.filterNot(fromDirs), schema,
+      s"no new $table dirs in $fromId..$to and no schema given")
   }
 
   /** Snapshot expiry + physical vacuum (Iceberg's `expire_snapshots`):

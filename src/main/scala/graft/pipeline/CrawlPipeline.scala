@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -179,7 +179,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 
   /** Runs wave `wave`; returns number of URLs fetched (0 = frontier drained). */
   def runWave(wave: Int): Long = {
-    var t = System.nanoTime()
     val front0 = frontierDf
     // dense seq ⇒ frontier size == max seq; manifest stats answer both
     // totals with zero Spark jobs (fallback: one agg on resume from a
@@ -238,36 +237,29 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       // through to the permissive default.
       val delay = if (robots.isEmpty) lit(conf.defaultDelay)
         else coalesce($"crawl_delay", lit(conf.defaultDelay))
-      val budget = greatest(lit(1L), floor(lit(conf.waveSeconds) / delay))
-      val rankW = Window.partitionBy($"host").orderBy($"depth", $"seq")
-      allowed
-        .withColumn("budget", budget)
-        .withColumn("rk", row_number().over(rankW))
-        .filter($"rk" <= $"budget")
-        .select($"url", $"host", $"depth", $"seq")
+      CrawlPipeline.selectWithinBudget(allowed,
+        greatest(lit(1L), floor(lit(conf.waveSeconds) / delay)))
     }
 
     // salted repartition: a hot host spreads over ceil(cnt/target) keys
     // (performance_optimizer.py:585-589 made real; first wave uses the
     // same formula — counts come from this wave's own selection).
-    // Per-host counts via groupBy + broadcast join back, NOT
-    // count().over(Window.partitionBy(host)): the window form shuffles
-    // AND sorts the whole selection by host, and the hot host's rows
-    // all land in one sort partition — a serial tail exactly where the
-    // salt was supposed to remove one. The agg is map-side partial
-    // (nHosts rows cross the wire); at web scale (10^7+ hosts) the
-    // count table outgrows broadcast and the join flips to shuffle +
-    // AQE skew split, still sort-free.
+    // The per-host count is `host_selected`, read off the politeness rank
+    // window: that window already shuffles and sorts the pending set by
+    // host, so a count over the same partition is free. A separate
+    // groupBy(host) + broadcast join back would evaluate the whole
+    // selection subtree (robots filter, host shuffle, sort, row_number) a
+    // second time for the count side.
     // NOTE: repartition hashes the key columns — pass (host, salt-bucket)
     // raw. Pre-modding to nPartitions values and hashing those would
     // birthday-collide into ~2/3 of the partitions with 3x skew.
     // On a budget-unbounded drain wave no per-host grouping is needed at
-    // all (politeness cannot bind), so skip the count/join and hash the
-    // fine-grained `seq` directly: the (host, salt) key space is coarse
-    // (~nHosts + hot-host buckets), and whole key-groups colliding into
-    // the same partition leaves a ±15% row-count spread across fetch
-    // tasks — a straggler tail exactly at the highest core count. A dense
-    // unique key hashes to ±2%.
+    // all (politeness cannot bind), so there is no rank window and no
+    // per-host count: hash the fine-grained `seq` directly. The (host,
+    // salt) key space is coarse (~nHosts + hot-host buckets), and whole
+    // key-groups colliding into the same partition leaves a ±15% row-
+    // count spread across fetch tasks — a straggler tail exactly at the
+    // highest core count. A dense unique key hashes to ±2%.
     val salted = if (budgetUnbounded) {
       selected.repartition(conf.nPartitions, $"seq")
     } else {
@@ -276,27 +268,14 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 
     // fetch stage (S3): per-partition fetcher, payload decode + invariant
     val fb = fetcherB
-    val traceFetch = CrawlPipeline.traceOn
     val fetchedRaw: Dataset[FetchOut] = salted.as[(String, String, Int, Long)]
-      .mapPartitions { it0 =>
+      .mapPartitions { it =>
         val f = fb.value
         val pid = TaskContext.getPartitionId()
         val exec = Option(org.apache.spark.SparkEnv.get).map(_.executorId).getOrElse("driver")
-        var fetchNs = 0L
-        var rows = 0L
-        val t0 = System.nanoTime()
-        val it = if (!traceFetch) it0 else new Iterator[(String, String, Int, Long)] {
-          def hasNext = {
-            val h = it0.hasNext
-            if (!h) System.err.println(f"[fetch-trace] pid=$pid rows=$rows fetch=${fetchNs / 1e9}%.1fs total=${(System.nanoTime() - t0) / 1e9}%.1fs")
-            h
-          }
-          def next() = it0.next()
-        }
         it.map { case (url, host, depth, seq) =>
-          val tf = System.nanoTime()
           val pg = f.fetch(url)
-          val out = if (pg.status == 200) {
+          if (pg.status == 200) {
             // thread-local decode: px (and possibly truthPixels) live in
             // per-thread scratch sized >= w*h; both are fully consumed
             // here, before the next fetch on this thread
@@ -316,9 +295,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
               psnr = 0.0, captionOk = false, wave = wave, pid = pid, executor = exec,
               bytes = null, caption = null, w = 0, h = 0, fmt = null, phash = 0L,
               nLinks = 0, nBytes = 0L)
-          fetchNs += System.nanoTime() - tf
-          rows += 1
-          out
         }
       }
 
@@ -329,11 +305,11 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // metrics) re-reads only the small columns it needs — parquet
     // column pruning skips the byte pages entirely. The staged dir
     // becomes visible only when the wave's manifest commits.
+    // The re-read is bound to the written schema: inferring it from the
+    // footers would cost a Spark job per wave.
     val stagedImagesDir = store.stage("images", fetchedRaw.toDF())
-    val imagesStat = graft.icelite.ParquetStats.dirStat(stagedImagesDir)
-    val nFetched = imagesStat.rows // footer metadata, no job
-    val fetched = spark.read.parquet(stagedImagesDir)
-    t = CrawlPipeline.trace(t, s"wave $wave select+fetch n=$nFetched files=${imagesStat.files}")
+    val nFetched = graft.icelite.ParquetStats.dirStat(stagedImagesDir).rows // footer metadata, no job
+    val fetched = spark.read.schema(fetchedRaw.schema).parquet(stagedImagesDir)
 
     // discoveries: explode links in document order (F10), resolve (F3),
     // scheme-filter (F1), canonicalize (C10)
@@ -397,13 +373,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // from footers, later consumers (commit reference, bloom merge)
     // read the file. No checkpoint or count jobs anywhere.
     val novelP = novel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (CrawlPipeline.traceOn) { // sub-phase attribution (trace builds only)
-      var tt = System.nanoTime()
-      val nCand = candidates.count()
-      tt = CrawlPipeline.trace(tt, s"wave $wave [sub] candidates n=$nCand")
-      val nNov = novelP.count()
-      CrawlPipeline.trace(tt, s"wave $wave [sub] seen-filter novel n=$nNov")
-    }
     // Empty-wave short-circuit: a draining frontier (and the final wave
     // of every crawl) discovers nothing new — isEmpty on the persisted
     // novel set is one cheap job, versus the range-sample + sort +
@@ -509,7 +478,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       .select($"wave", $"partitionId", $"executor", $"nRows")
       .withColumn("stage", lit("fetch"))
 
-    t = CrawlPipeline.trace(t, s"wave $wave discover n=$nNew")
     val staged = Seq.newBuilder[(String, String)]
     if (nFetched > 0) staged += "images" -> stagedImagesDir
     stagedFrontierDirOpt.foreach { dir =>
@@ -557,8 +525,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     if (nNew > 0 && !useBuckets)
       stagedFrontierDirOpt.foreach(dir =>
         seenBloom.foreach(_.mergeInPlace(UrlSeen.buildBloom(
-          spark.read.parquet(dir), "url", conf.bloomExpectedSeen))))
-    CrawlPipeline.trace(t, s"wave $wave commit")
+          spark.read.schema(frontierSchema).parquet(dir), "url", conf.bloomExpectedSeen))))
     nFetched
   }
 
@@ -616,35 +583,44 @@ object CrawlPipeline {
       two(pmod(secs, lit(60L))))
   }
 
+  /** The per-host politeness selection (§2.8): the first `budget` pending
+    * URLs of each host in (depth, seq) order. `allowed` carries url, host,
+    * depth and seq; `budget` must be constant within a host. The result
+    * keeps those four columns plus `host_selected`, the host's selected
+    * row count, min(budget, pending count). That count comes from the
+    * rank window itself — `count(1)` over the same (host ORDER BY depth,
+    * seq) partition with an unbounded frame — so it shares the rank's
+    * one shuffle + sort and costs no second pass over the selection. */
+  def selectWithinBudget(allowed: DataFrame, budget: Column): DataFrame = {
+    val rankW = Window.partitionBy(col("host")).orderBy(col("depth"), col("seq"))
+    val hostW = rankW.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    allowed
+      .withColumn("budget", budget)
+      .withColumn("rk", row_number().over(rankW))
+      .withColumn("host_selected", least(col("budget"), count(lit(1)).over(hostW)))
+      .filter(col("rk") <= col("budget"))
+      .select(col("url"), col("host"), col("depth"), col("seq"), col("host_selected"))
+  }
+
   /** The politeness-bounded fetch stage's salted partitioning (moved out
     * of runWave so the skew bound is spec-testable — the SURVEY §4
     * "domain-aware crawling" recommendation made measurable,
-    * `performance_optimizer.py:585-589`): per-host counts from THIS
-    * selection via a map-side-partial agg + broadcast join back, salt =
-    * floor(count/target) buckets per host, repartition on the RAW
-    * (host, seq % salt) pair — pre-modding the pair to nPartitions
-    * values and hashing those birthday-collides into ~2/3 of the
-    * partitions with 3× skew (BASELINE.md "Scale notes"). A host
-    * holding half the selection spreads over count/target buckets, so
-    * per-partition row counts stay near-uniform; CrawlParitySpec pins
-    * the ≤2× bound on a 50%-one-host selection. */
+    * `performance_optimizer.py:585-589`). `selected` is the output of
+    * [[selectWithinBudget]]: its `host_selected` column is each row's
+    * host's row count in THIS selection. Salt = floor(count/target)
+    * buckets per host, repartition on the RAW (host, seq % salt) pair —
+    * pre-modding the pair to nPartitions values and hashing those
+    * birthday-collides into ~2/3 of the partitions with 3× skew
+    * (BASELINE.md "Scale notes"). A host holding half the selection
+    * spreads over count/target buckets, so per-partition row counts
+    * stay near-uniform; CrawlParitySpec pins the ≤2× bound on a
+    * 50%-one-host selection. */
   def saltedFetchPartitions(selected: DataFrame, nPartitions: Int,
-                            hostSaltTarget: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val hostCounts = selected.groupBy(col("host")).agg(count(lit(1)).as("__hc"))
+                            hostSaltTarget: Int): DataFrame =
     selected
-      .join(broadcast(hostCounts), Seq("host"))
-      .withColumn("salt", greatest(lit(1L), floor(col("__hc") / lit(hostSaltTarget))))
+      .withColumn("salt", greatest(lit(1L), floor(col("host_selected") / lit(hostSaltTarget))))
       .repartition(nPartitions, col("host"), pmod(col("seq"), col("salt")))
       .select(col("url"), col("host"), col("depth"), col("seq"))
-  }
-
-  /** Section timing to stderr when SPARK_GRAFT_TRACE=1 (perf debugging). */
-  private[pipeline] val traceOn = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-  def trace(since: Long, msg: String): Long = {
-    if (traceOn) System.err.println(f"[crawl-trace] $msg: ${(System.nanoTime() - since) / 1e9}%.2fs")
-    System.nanoTime()
-  }
 }
 
 /** Flat fetch-stage row: FetchResult fields + payload + lineage. */

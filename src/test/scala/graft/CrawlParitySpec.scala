@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.corpus.SyntheticWeb
@@ -147,7 +148,8 @@ class CrawlParitySpec extends AnyFunSuite {
       val host = if (i % 2 == 0) "hot.test" else s"h${i % 64}.test"
       (s"http://$host/p/$i", host, 1, i.toLong)
     }
-    val sel = rows.toDF("url", "host", "depth", "seq").repartition(5)
+    val sel = CrawlPipeline.selectWithinBudget(
+      rows.toDF("url", "host", "depth", "seq").repartition(5), lit(n.toLong))
     val nParts = 16
     val salted = CrawlPipeline.saltedFetchPartitions(sel, nParts, hostSaltTarget = 8)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
@@ -164,6 +166,49 @@ class CrawlParitySpec extends AnyFunSuite {
         .count(_._2 > 0)
       assert(hotSpread >= nParts / 2, s"hot host confined to $hotSpread partitions")
     } finally salted.unpersist(blocking = false)
+  }
+
+  test("window-derived host counts give the groupBy + broadcast formula's partition ids") {
+    // skewed pending set: a hot host with half the rows over three
+    // depths, hosts with a 1 s or 5 s delay, seq out of order within a
+    // host so the (depth, seq) rank is not the input order
+    val n = 6000
+    val rows = (1 to n).map { i =>
+      val host = if (i % 2 == 0) "hot.test" else s"h${i % 40}.test"
+      val delay = if (host.hashCode % 3 == 0) 5.0 else 1.0
+      (s"http://$host/p/$i", host, i % 3, ((i * 7919L) % n) + 1, delay)
+    }
+    val allowed = rows.toDF("url", "host", "depth", "seq", "crawl_delay").repartition(7)
+    val nParts = 16
+    val target = 8
+    def pids(df: DataFrame): Map[String, Int] = df.select($"url").rdd
+      .mapPartitionsWithIndex((pid, it) => it.map(r => r.getString(0) -> pid))
+      .collect().toMap
+    // the formula saltedFetchPartitions used before the count moved into
+    // the rank window: re-aggregate the selection, broadcast it back
+    def legacy(selected: DataFrame): DataFrame = {
+      val hc = selected.groupBy($"host").agg(count(lit(1)).as("__hc"))
+      selected.join(broadcast(hc), Seq("host"))
+        .withColumn("salt", greatest(lit(1L), floor($"__hc" / lit(target))))
+        .repartition(nParts, $"host", pmod($"seq", $"salt"))
+    }
+    for ((waveSeconds, binds) <- Seq(20.0 -> true, 1e6 -> false)) {
+      val budget = greatest(lit(1L), floor(lit(waveSeconds) / $"crawl_delay"))
+      val sel = CrawlPipeline.selectWithinBudget(allowed, budget)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      try {
+        val nSel = sel.count()
+        assert((nSel < n) == binds, s"waveSeconds=$waveSeconds selected $nSel of $n")
+        // host_selected is the host's row count in the selection itself
+        val counted = sel.groupBy($"host").agg(count(lit(1)).as("c"), max($"host_selected").as("h"),
+          min($"host_selected").as("l")).as[(String, Long, Long, Long)].collect()
+        counted.foreach { case (h, c, hi, lo) => assert(hi == c && lo == c, s"$h: $c vs $lo..$hi") }
+        val got = pids(CrawlPipeline.saltedFetchPartitions(sel, nParts, target))
+        val want = pids(legacy(sel.drop("host_selected")))
+        assert(got.size == nSel)
+        assert(got == want, s"waveSeconds=$waveSeconds: partition ids differ")
+      } finally sel.unpersist(blocking = false)
+    }
   }
 
   test("crawl_date rendering is session-timezone independent (UTC-pinned)") {
