@@ -8,59 +8,41 @@ import graft.fetch.Fetcher
 import graft.icelite.IceLite
 import graft.pipeline.{CrawlConfig, CrawlPipeline}
 
-/**
- * Benchmark main (driver contract): prints ONE JSON line.
- *
- *  - `queries`: wall seconds per headline SparkEntry query on
- *    SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS].
- *  - `crawl`: the north-rule metric — URLs fetched+verified per second
- *    over a pre-seeded synthetic frontier, drained in one politeness-
- *    unconstrained wave. This is the production shape: at the 10^10-URL
- *    design scale a single politeness wave holds 10^7+ URLs, so per-wave
- *    fixed driver costs are noise there; a small-page BFS crawl would
- *    measure those fixed costs instead of engine throughput. Measured at
- *    local[1] vs local[4] (N vs 4N with zero SMT overlap — this
- *    sandbox's 32 vCPUs are not physically backed, see BASELINE.md) plus
- *    scaling efficiency (rate4N/rateN)/4, target >= 0.8. The end-to-end
- *    multi-wave BFS loop is reported alongside (`bfs_*`); its ordering
- *    semantics are covered by CrawlParitySpec, not timed here.
- *
- * Noise handling: each timed leg is preceded by a small same-plan warmup
- * (JIT + codegen cache), and a leg is re-run once when the efficiency
- * lands outside plausibility bounds — this host's run-to-run variance is
- * 2-4x (BASELINE.md "Measured").
- */
+/** Benchmark main: prints ONE JSON line, whose keys are a stable contract.
+  *  - `queries`: wall seconds per headline SparkEntry query on
+  *    SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS].
+  *  - `crawl`: the north-rule metric — URLs fetched+verified per second
+  *    draining a pre-seeded frontier in one politeness-unconstrained wave
+  *    (at 10^10 URLs one wave holds 10^7+ URLs, so per-wave fixed costs
+  *    are noise), at N vs 4N cores (default 1 vs 4, see BASELINE.md), and
+  *    scaling efficiency (rate4N/rateN)/4, gated at >= 0.8 on the median
+  *    of this run's [[PairsPerRun]] same-window leg pairs. Nothing carries
+  *    across runs, so a slower drain shows in the next run's median. The
+  *    multi-wave BFS loop is reported as `bfs_*`. */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  /** Same-window (N, 4N) leg pairs per run; odd, so the median is one pair. */
+  private val PairsPerRun = 3
+  /** Pages of the same-plan warmup crawl before each timed leg (JIT + codegen). */
+  private val WarmupPages = 2000
+
+  private[graft] def session(cores: Int): SparkSession = {
     // SPARK_GRAFT_MASTER overrides the master URL ({cores} substituted).
     // `local-cluster[{cores},1,<mb>]` runs one 1-core executor JVM per
-    // "node" — the sandbox's closest rendition of the north rule's
-    // "N vs 4N executors" (what spark-submit to a real cluster gives).
-    // Cluster mode needs SPARK_HOME=/opt/spark AND SPARK_SCALA_VERSION=
-    // 2.13 in the environment: the in-process Worker builds each
-    // executor's launch command through the dist's command builder,
-    // which otherwise dies with "Cannot find any build directories"
-    // (normally exported by the dist's load-spark-env.sh).
-    // It is supplementary evidence, not the default: its loopback-netty
-    // shuffle + per-executor JIT cost ~15% absolute wall vs local[k],
-    // but it removes single-JVM measurement skew (4 task threads sharing
-    // one young gen inflate the per-row kernel ~24% vs ~16% for 4
-    // separate 1-thread JVMs on 4 busy cores — graft.bench.KernelScale),
-    // contention a real multi-executor cluster does not have.
+    // "node", the closest local rendition of "N vs 4N executors". It needs
+    // SPARK_HOME and SPARK_SCALA_VERSION=2.13 exported: the in-process
+    // Worker builds executor commands through the dist's command builder.
+    // Not the default: it costs ~15% wall vs local[k] (netty shuffle,
+    // per-executor JIT), but avoids 4 task threads sharing a young gen.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "") match {
-      case "local" => s"local[$cores]"
-      case ""      => s"local[$cores]"
-      case tpl     => tpl.replace("{cores}", cores.toString)
+      case "" | "local" => s"local[$cores]"
+      case tpl          => tpl.replace("{cores}", cores.toString)
     }
-    val b = SparkSession.builder()
-      .master(master)
+    val b = SparkSession.builder().master(master)
     if (master.startsWith("local-cluster")) {
-      // forked executor JVMs start from the bare Spark-dist classpath:
-      // hand them the app classes and the JDK-17 module opens the driver
-      // JVM runs with (build.sbt javaOptions)
-      // absolutize: executors run from their own scratch dir, so any
-      // relative entry on the driver's classpath would silently vanish
+      // forked executors start from the bare Spark-dist classpath: hand
+      // them the app classes (absolute — they run from their own scratch
+      // dir) and the driver's JDK-17 module opens (build.sbt javaOptions)
       val absCp = System.getProperty("java.class.path")
         .split(java.io.File.pathSeparator)
         .map(p => new java.io.File(p).getAbsolutePath)
@@ -84,331 +66,133 @@ object Bench {
     s
   }
 
-  /** Stage crawl payloads on RAM-backed /dev/shm when present and roomy
-    * (override off with SPARK_GRAFT_BENCH_SHM=0). Rationale: the scaling
-    * legs model per-NODE resources — the cpuset pins CPU to N cores the
-    * way YARN/k8s would, but this sandbox has ONE shared disk, so the 4N
-    * leg gets the same aggregate write bandwidth as the N leg. A real 4N
-    * cluster brings 4x the local disks/object-store lanes (storage
-    * bandwidth scales with node count), so the shared disk injects a
-    * fixed ~4 s serial term into BOTH legs that exists only in the
-    * sandbox, deflating the measured CPU-scaling ratio. RAM staging
-    * removes that artifact; the payload write itself (columnar encode +
-    * file commit) is still fully executed and timed. */
-  private[graft] lazy val shmStaging: Boolean =
-    // a leg subprocess must stage wherever its PARENT decided: free-space
-    // can change mid-run, and a leg that silently fell back to disk would
-    // feed disk-protocol times into the _shm-versioned floor caches
-    sys.env.get("SPARK_GRAFT_BENCH_SHM_RESOLVED") match {
-      case Some(v) => v == "1"
-      case None =>
-        val shm = new java.io.File("/dev/shm")
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SHM", "1") == "1" &&
-          shm.isDirectory && shm.canWrite && shm.getUsableSpace > 32L * (1L << 30)
-    }
-  // Floors/pairs only compare within one measurement protocol: staging
-  // medium, warmup size (w$cores floors are warmup times), and master
-  // topology (local-cluster legs cost ~15% more wall than local[k]). An
-  // off-protocol experiment must never poison the default caches — every
-  // deviation gets its own cache file.
-  private def protocolTag: String = {
-    val wp = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PAGES", "2000")
-    val m = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
-    // `_drain`: timed window is the frontier drain only (bootstrap init
-    // reported separately) — whole-leg floors/pairs must never mix in
-    (if (shmStaging) "_shm" else "") + "_drain" +
-      (if (wp != "2000") s"_w$wp" else "") +
-      (if (m.nonEmpty && m != "local")
-        "_m" + m.replaceAll("[^A-Za-z0-9]", "").take(16) else "")
+  /** Stage crawl payloads on RAM-backed /dev/shm when present and roomy:
+    * one shared disk (a real 4N cluster has 4x the disks) adds a serial
+    * term to both legs that deflates the scaling ratio; the payload write
+    * is still timed. Decided once per run by the parent and passed to
+    * every leg, so free space changing mid-run cannot mix media. */
+  private def shmStaging(): Boolean = {
+    val shm = new java.io.File("/dev/shm")
+    shm.isDirectory && shm.canWrite && shm.getUsableSpace > 32L * (1L << 30)
   }
-  private def cacheName(base: String): String = s"$base$protocolTag.tsv"
 
-  /** Directory for the persisted floor/pair ledger. Cross-run minima are
-    * only useful if they actually survive across runs — a tmpdir ledger
-    * dies with every sandbox restart, resetting `scaling_efficiency_best`
-    * and the pair median to single-run estimates on a 2-4x-noise host.
-    * Default: `bench_ledger/` under the working directory (the repo when
-    * launched via sbt or tools/legpair_campaign.sh), committed to git;
-    * `SPARK_GRAFT_BENCH_LEDGER` overrides; tmpdir is the last resort.
-    * Ledger entries are protocol-versioned by file name (cacheName), so
-    * committed floors never mix across protocols. */
-  private val ledgerDir: java.nio.file.Path = {
-    val candidate = sys.env.get("SPARK_GRAFT_BENCH_LEDGER")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get("bench_ledger"))
-    try { java.nio.file.Files.createDirectories(candidate); candidate }
-    catch { case _: Exception =>
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    }
+  /** One timed crawl leg: pages fetched, drain seconds, bootstrap seconds. */
+  private[graft] case class Leg(fetched: Long, secs: Double, initSecs: Double) {
+    def rate: Double = fetched / secs
   }
 
   /** One crawl; `preSeeded` drains the full frontier in a single wave
     * (the north-metric shape), otherwise a 4096-seed BFS expansion. */
   private def crawlOnce(spark: SparkSession, cores: Int, nPages: Int,
-                        preSeeded: Boolean): (Long, Double, Double) = {
+                        preSeeded: Boolean, shm: Boolean): Leg = {
     val web = BenchWeb(seed = 42L, nHosts = 64, nPages = nPages)
     val fetcher: Fetcher = new BenchFetcher(web)
-    val root = (if (shmStaging)
+    val root = (if (shm)
         Files.createTempDirectory(java.nio.file.Paths.get("/dev/shm"), s"bench-crawl-$cores")
       else Files.createTempDirectory(s"bench-crawl-$cores")).toString
     val pipe = new CrawlPipeline(spark, new IceLite(root),
       spark.sparkContext.broadcast(fetcher), robots = Seq.empty,
-      // 4 tasks/core: the fetch stage's per-task row counts vary ~±10%
-      // from key hashing, so 2 tasks/core strands cores behind the two
-      // slowest tasks (~2 s tail at 4 cores); finer grain packs the tail
+      // 4 tasks/core: per-task row counts vary ~±10% from key hashing,
+      // and 2 tasks/core strands cores behind the slowest tasks
       CrawlConfig(waveSeconds = 1e9, nPartitions = cores * 4,
         hostSaltTarget = 64, bloomExpectedSeen = nPages.toLong * 2))
     val seeds = if (preSeeded) (0 until nPages).map(web.urlOf) else web.seeds
     try {
-      // The TIMED window is the drain (`run`): the north metric is URLs
-      // fetched+verified per second over an EXISTING frontier — at
-      // 10^10 URLs the frontier is a durable table, not something
-      // re-ingested per run, and the reference's own scalability test
-      // measures crawl rate from status deltas AFTER seeding
-      // (`test_system.py:386-424`). The one-off bootstrap (seed
-      // canonicalize/dedup/commit) is still measured and reported
-      // separately as `init_secs_*` — it is charged to neither leg's
-      // rate. Floor/pair caches are protocol-versioned (`_drain`), so
-      // whole-leg times from the old protocol never mix in.
+      // The TIMED window is the drain, as the reference's scalability test
+      // measures crawl rate after seeding (`test_system.py:386-424`); the
+      // bootstrap is reported as `init_secs_*`, charged to neither rate.
       val ti = System.nanoTime()
       pipe.init(seeds)
       val initSecs = (System.nanoTime() - ti) / 1e9
       val t0 = System.nanoTime()
       pipe.run(maxWaves = 30)
       val fetched = new IceLite(root).tableStat("fetchlog").map(_._1).getOrElse(0L)
-      val secs = (System.nanoTime() - t0) / 1e9
-      (fetched, secs, initSecs)
-    } finally
-      // always reclaim the staging dir — a leg killed mid-run must not
-      // leak multi-GB payloads (on /dev/shm that's leaked RAM)
+      Leg(fetched, (System.nanoTime() - t0) / 1e9, initSecs)
+    } finally // a failed leg must not leak multi-GB payloads (RAM on /dev/shm)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
-  /** Warmed, timed crawl leg at `cores`, in THIS JVM. Returns
-    * (fetched, legSecs, warmupSecs): the warmup (same literal-free
-    * plans, 2000 pages) doubles as a noise probe — it exercises the
-    * exact Spark path whose slowdowns the arithmetic probes cannot see
-    * (a whole bench ran with quiet ALU probes while every leg was
-    * 1.7-3x slow), so the caller gates legs on warmup inflation. */
-  private def crawlLeg(cores: Int, nPages: Int, preSeeded: Boolean): (Long, Double, Double, Double) = {
-    val spark = session(cores)
-    try {
-      val w0 = System.nanoTime()
-      // warmup size is part of the floor protocol (w$cores values only
-      // compare across runs at the same size; overrides are cache-
-      // versioned via protocolTag) — override for one-off experiments
-      // only (e.g. multi-executor legs JIT each executor JVM separately
-      // and need more rows per executor to reach C2)
-      crawlOnce(spark, cores,
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PAGES", "2000").toInt,
-        preSeeded)
-      val warm = (System.nanoTime() - w0) / 1e9
-      val (f, s, init) = crawlOnce(spark, cores, nPages, preSeeded)
-      (f, s, warm, init)
-    } finally spark.stop()
-  }
-
-  /** Run a crawl leg in a FRESH subprocess JVM. Long-lived local-mode
-    * JVMs degrade measurably across successive SparkContexts (metaspace
-    * + codegen-class accumulation — a measured 8x slowdown by the 4th
-    * session); a fresh JVM per leg is also what a real cluster gives
-    * each benchmark run. Falls back to in-process on spawn failure. */
-  private def crawlRun(cores: Int, nPages: Int, preSeeded: Boolean): (Long, Double, Double, Double) = {
+  /** Run one warmed crawl leg in a FRESH subprocess JVM: long-lived
+    * local-mode JVMs slow down across successive SparkContexts (metaspace
+    * + codegen classes; 8x by the 4th session). A failed leg fails the
+    * bench with its output; it is never re-measured in another mode. */
+  private def crawlRun(cores: Int, nPages: Int, preSeeded: Boolean, shm: Boolean): Leg = {
     val javaBin = new java.io.File(new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.toArray.map(_.toString)
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    // Bind the leg to exactly `cores` CPUs (taskset cpuset) AND size the
-    // JVM's pools for them (ActiveProcessorCount). The pinning is the
-    // "same job on an N-core cluster" the scaling rule means: cluster
-    // executors are cpuset/cfs-bound by YARN/k8s, so their GC, JIT,
-    // shuffle IO and scheduler threads compete with task threads for the
-    // same N cores. Unpinned, a local[1] leg offloads ~1.5 cores of
-    // GC+JIT+driver work to this box's idle vCPUs (measured 260% process
-    // CPU), silently deflating the N-leg time and the N->4N ratio with
-    // it. The cpuset is chosen per leg as the currently-idlest cores
-    // (/proc/stat sampled over 400 ms): a pinned leg cannot migrate off
-    // a core a co-tenant camps on, so pinning to fixed core 0..N-1 turns
-    // one noisy neighbor into a 2x leg — dodge it at launch instead.
-    val pin = if (new java.io.File("/usr/bin/taskset").exists())
-      Seq("/usr/bin/taskset", "-c", idlestCores(cores).mkString(",")) else Seq.empty
-    val cmd = pin ++ Seq(javaBin) ++ jvmArgs ++ Seq(
+    // Bind the leg to exactly `cores` CPUs and size the JVM's pools for
+    // them, as YARN/k8s bind executors: unpinned, a local[1] leg offloads
+    // ~1.5 cores of GC+JIT+driver work to idle vCPUs.
+    val cmd = Seq("taskset", "-c", s"0-${cores - 1}", javaBin) ++ jvmArgs ++ Seq(
       s"-XX:ActiveProcessorCount=$cores",
       "-cp", System.getProperty("java.class.path"),
-      "graft.Bench", "--crawl", cores.toString, nPages.toString, preSeeded.toString)
-    try {
-      val pb = new ProcessBuilder(cmd: _*)
-      // pin the leg to this process's staging decision (see shmStaging)
-      pb.environment().put("SPARK_GRAFT_BENCH_SHM_RESOLVED", if (shmStaging) "1" else "0")
-      // discard child stderr (Spark logging) — reading it serially after
-      // stdout would deadlock once the 64 KB pipe buffer fills
-      pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      proc.waitFor()
-      val line = out.linesIterator.find(_.startsWith("CRAWL_LEG ")).getOrElse(
-        throw new IllegalStateException(s"no CRAWL_LEG line in subprocess output: $out"))
-      val parts = line.trim.split(" ")
-      (parts(1).toLong, parts(2).toDouble, parts(3).toDouble,
-        if (parts.length > 4) parts(4).toDouble else 0.0)
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[bench] subprocess leg failed (${e.getMessage}); running in-process")
-        crawlLeg(cores, nPages, preSeeded)
+      "graft.Bench", "--crawl", cores.toString, nPages.toString,
+      preSeeded.toString, shm.toString)
+    // one merged stream: reading two pipes serially can deadlock
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    val exit = proc.waitFor()
+    out.linesIterator.find(_.startsWith("CRAWL_LEG ")) match {
+      case Some(line) if exit == 0 =>
+        val p = line.trim.split(" ")
+        System.err.println(s"[bench] leg cores=$cores preSeeded=$preSeeded ${line.trim}")
+        Leg(p(1).toLong, p(2).toDouble, p(3).toDouble)
+      case _ =>
+        throw new IllegalStateException(
+          s"crawl leg (cores=$cores preSeeded=$preSeeded) exited $exit; output:\n$out")
     }
   }
 
-  /** The `n` currently-idlest CPUs by /proc/stat busy-delta over 400 ms
-    * (falls back to 0..n-1 if unreadable). */
-  private def idlestCores(n: Int): Seq[Int] = {
-    def snap(): Map[Int, (Long, Long)] = try {
-      scala.io.Source.fromFile("/proc/stat").getLines()
-        .filter(l => l.startsWith("cpu") && l.length > 3 && l(3).isDigit)
-        .map { l =>
-          val p = l.trim.split("\\s+")
-          val cpu = p(0).drop(3).toInt
-          val fields = p.drop(1).map(_.toLong)
-          val idle = fields(3) + (if (fields.length > 4) fields(4) else 0L) // idle+iowait
-          (cpu, (fields.sum, idle))
-        }.toMap
-    } catch { case _: Exception => Map.empty }
-    val a = snap(); Thread.sleep(400); val b = snap()
-    if (a.isEmpty || b.isEmpty) (0 until n)
-    else b.keysIterator.toSeq.sorted
-      .map { c =>
-        val (t0, i0) = a.getOrElse(c, (0L, 0L)); val (t1, i1) = b(c)
-        val total = math.max(1L, t1 - t0)
-        c -> ((total - (i1 - i0)).toDouble / total) // busy fraction
-      }
-      .sortBy { case (c, busy) => (busy, c) }
-      .take(n).map(_._1).sorted
+  /** Scaling efficiency of one (N, 4N) leg pair: (rate4N / rateN) / 4. */
+  private[graft] def pairEfficiency(n: Leg, n4: Leg): Double = (n4.rate / n.rate) / 4.0
+
+  /** (median, max − min) of pair efficiencies; even counts average the middle two. */
+  private[graft] def pairEstimate(effs: Seq[Double]): (Double, Double) = {
+    require(effs.nonEmpty, "no leg pairs")
+    val s = effs.sorted
+    ((s((s.size - 1) / 2) + s(s.size / 2)) / 2.0, s.last - s.head)
   }
 
-  /** Fixed arithmetic workload (~0.3 s single-thread on a quiet core),
-    * run on `threads` threads; returns wall seconds for all to finish.
-    * Single-thread form detects per-core co-tenancy windows (this box
-    * swings 2-3x for minutes at a time — measured 30 s and 86 s for the
-    * SAME crawl leg an hour apart); the 4-thread form additionally
-    * catches host-wide overcommit that leaves one core fast while
-    * parallel legs starve (observed: quiet 1-thread probes throughout a
-    * window where every 4-core leg ran 1.7-3x slow). Legs launched
-    * inside a slow window measure the neighbors, not the engine. */
-  private def probeSecs(threads: Int = 1): Double = {
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { _ =>
-      val t = new Thread(() => {
-        var x = 1234567L
-        var i = 0
-        while (i < 150000000) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
-        if (x == 42L) System.err.print("") // keep the loop live
-      })
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
+  /** The artifact's `crawl` object for a run's (N, 4N) `pairs` and BFS leg.
+    * `secs_*`, `fetched_*`, `init_secs_*` and `scaling_efficiency` come
+    * from each side's fastest leg; the gate reads the run median. */
+  private[graft] def crawlJson(pages: Int, nCores: Int, pairs: Seq[(Leg, Leg)], bfs: Leg): String = {
+    val bestN = pairs.map(_._1).minBy(_.secs)
+    val best4 = pairs.map(_._2).minBy(_.secs)
+    val effs = pairs.map { case (n, n4) => pairEfficiency(n, n4) }
+    val (median, spread) = pairEstimate(effs)
+    def arr(xs: Seq[Double], fmt: String) = xs.map(fmt.format(_)).mkString("[", ",", "]")
+    f"""{"mode":"frontier_drain","pages":$pages,"n_cores":$nCores,"4n_cores":${nCores * 4},""" +
+      f""""urls_per_sec_n":${bestN.rate}%.1f,"urls_per_sec_4n":${best4.rate}%.1f,""" +
+      f""""scaling_efficiency":${pairEfficiency(bestN, best4)}%.3f,""" +
+      s""""pair_efficiencies":${arr(effs, "%.3f")},""" +
+      f""""scaling_efficiency_run_median":$median%.3f,"scaling_efficiency_run_spread":$spread%.3f,""" +
+      f""""fetched_n":${bestN.fetched},"fetched_4n":${best4.fetched},""" +
+      f""""secs_n":${bestN.secs}%.1f,"secs_4n":${best4.secs}%.1f,""" +
+      f""""init_secs_n":${bestN.initSecs}%.1f,"init_secs_4n":${best4.initSecs}%.1f,""" +
+      s""""legs_n_secs":${arr(pairs.map(_._1.secs), "%.1f")},""" +
+      s""""legs_4n_secs":${arr(pairs.map(_._2.secs), "%.1f")},""" +
+      f""""bfs_pages":${bfs.fetched},"bfs_secs":${bfs.secs}%.1f,"bfs_urls_per_sec_4n":${bfs.rate}%.1f}"""
   }
 
-  /** Memory-bandwidth probe: 4 threads each stream-sum a disjoint 64 MB
-    * slice of a shared 256 MB array (DRAM-resident, far beyond L3);
-    * returns wall seconds. Detects the co-tenancy mode the ALU probes
-    * are blind to: a bandwidth-heavy neighbor leaves register-resident
-    * arithmetic at full speed while anything that streams memory — the
-    * codec/fetch legs included — runs 1.5-1.8x slow (measured: a full
-    * bench window with quiet ALU probes, near-best 2000-page warmups,
-    * and every 100k-page 4-core leg 35-47 s against a 23.7 s best). */
-  private lazy val bwArray: Array[Long] = Array.tabulate(32 << 20)(i => i.toLong)
-  private def bwProbeSecs(): Double = {
-    val n = bwArray.length
-    val slice = n / 4
-    val t0 = System.nanoTime()
-    val ts = (0 until 4).map { k =>
-      val t = new Thread(() => {
-        var acc = 0L
-        var rep = 0
-        while (rep < 2) {
-          var i = k * slice
-          val end = i + slice
-          while (i < end) { acc += bwArray(i); i += 1 }
-          rep += 1
-        }
-        if (acc == 42L) System.err.print("")
-      })
-      t.start(); t
-    }
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** (median efficiency, count) over the persisted same-window leg pairs
-    * for `pages`, keeping only pairs whose warmups sit within the
-    * clean-leg threshold (1.25×) of the current warmup floors `wbN`/
-    * `wb4` AND — when drain floors `sbN`/`sb4` are known — whose drains
-    * sit within 1.15× of those floors, the same two-sided rule `runLeg`
-    * applies in-run. The drain gate matters because the warmup precedes
-    * the drain by ~10-80 s: a noise burst arriving mid-drain banks a
-    * pair whose warmups look quiet but whose ratio measured the host,
-    * not the engine (observed: 27 s 4-core drains alongside 87 s ones
-    * behind near-identical warmups). The gate width bounds the noise
-    * error the median can admit: a drain gate of g lets a pair's ratio
-    * be wrong by up to (1 − 1/g) from one slow side alone — at the old
-    * 1.30 that is −23%, wider than the 0.80-gate-to-floor gap being
-    * resolved, and host noise is asymmetric here (4 pinned cores are
-    * ~4× as exposed to a stolen core as 1), so wide gates mostly admit
-    * deflated ratios. 1.15 bounds the admitted per-pair error at ±13%.
-    * Floors only ever decrease, so the gate tightens monotonically as
-    * quieter windows are observed.
-    * File lines: pages\tsN\twN\ts4N\tw4N. Returns (-1, 0) when no
-    * clean pair exists or the file is unreadable. */
-  private[graft] def pairStats(file: java.nio.file.Path, pages: Long,
-                               wbN: Double, wb4: Double,
-                               sbN: Double = -1.0, sb4: Double = -1.0): (Double, Int) = try {
-    val all = if (java.nio.file.Files.exists(file))
-      new String(java.nio.file.Files.readAllBytes(file), "UTF-8")
-        .linesIterator.map(_.split("\t"))
-        // per-line tolerance: the file is appended by concurrent
-        // invocations without locking, so one torn/partial line must not
-        // discard every valid pair around it
-        .flatMap(a => scala.util.Try {
-          require(a.length == 5 && a(0).toLong == pages)
-          (a(1).toDouble, a(2).toDouble, a(3).toDouble, a(4).toDouble)
-        }.toOption)
-        .toSeq
-    else Seq.empty
-    val clean = all.filter { case (sN, wN, s4, w4) =>
-      wbN > 0 && wb4 > 0 && wN <= 1.25 * wbN && w4 <= 1.25 * wb4 &&
-        (sbN <= 0 || sN <= 1.15 * sbN) && (sb4 <= 0 || s4 <= 1.15 * sb4) }
-    val effs = clean.map { case (sN, _, s4c, _) => (sN / s4c) / 4.0 }.sorted
-    if (effs.isEmpty) (-1.0, 0) else (effs(effs.size / 2), effs.size)
-  } catch { case _: Exception => (-1.0, 0) }
-
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q01_agg", "q02_join_broadcast", "q05_first_seen", "q13_token_freq",
     "q21_minhash_lsh", "q22_simhash", "q24_knn_cosine", "q31_sessionize",
-    // round-2 additions: the heaviest new training-data ops, tracked so
-    // a plan regression (q21-class recompute) shows up in the artifact
+    // the heaviest training-data, sparse-retrieval (q84) and map-side
+    // explode (q95) shapes, tracked so a plan regression (a q21-class
+    // recompute, a gram-table recompute) shows up in the artifact
     "q45_ivf_ann", "q59_phash_pairs", "q60_chunk_dedup", "q62_pack_sequences",
-    "q73_image_dup_clusters", "q77_asof_join",
-    // round-2 closers: the caption-hash aggregate (q79) and the
-    // cross-modal bucket probe (q83) are the newest heavy shapes
-    "q79_clip_align", "q83_crossmodal",
-    // the df-capped posting self-join (q84) is the heaviest sparse-
-    // retrieval shape — tracked for the same regression reason as q21
-    "q84_tfidf_pairs",
-    // the sliding-gram explode (q95) is the widest map-side expansion
-    // in the suite — tracked so a gram-table recompute or a
-    // string-shuffle regression shows up in the artifact
-    "q95_dup_spans")
+    "q73_image_dup_clusters", "q77_asof_join", "q79_clip_align", "q83_crossmodal",
+    "q84_tfidf_pairs", "q95_dup_spans")
 
   /** Per-query regression bars at sf0.1 (BASELINE.md "Regression
     * bars"): a quiet-window violation means the NAMED plan regressed —
-    * q21 over 10 s = the signature-reuse materialization is gone (the
-    * round-1 8x-recompute); q95 over 8 s = the gram table recomputes
-    * per consumer or grams shuffle as strings; q73 over 4 s = the
-    * banded pair join or checkpoint-truncated CC iterations regressed.
-    * The suite bar is the top of the quiet-host band. Checked
-    * mechanically on every run; violations land in the artifact's
-    * `bar_violations` so a regression is visible without re-reading
-    * BASELINE.md. */
+    * q21 over 10 s = the signature-reuse materialization is gone; q95
+    * over 8 s = the gram table recomputes per consumer or grams shuffle
+    * as strings; q73 over 4 s = the banded pair join or checkpoint-
+    * truncated CC iterations regressed. The suite bar is the top of the
+    * quiet-host band. Violations land in the artifact's `bar_violations`. */
   val regressionBars: Map[String, Double] = Map(
     "q21_minhash_lsh" -> 10.0,
     "q95_dup_spans" -> 8.0,
@@ -427,30 +211,26 @@ object Bench {
     per ++ (if (tot > suiteBar) Seq(f"total:$tot%.2f>$suiteBar%.1f") else Nil)
   }
 
-  /** True iff the sf dir's FINAL PATH SEGMENT is exactly "sf0.1" — the
-    * scale the query bars are calibrated at. Segment equality, not a
-    * string suffix: ".../xsf0.1" or a doubled trailing slash must not
-    * turn the bars on against data they were never calibrated for. */
+  /** True iff the sf dir's FINAL PATH SEGMENT is exactly "sf0.1", the
+    * scale the bars are calibrated at: ".../xsf0.1" must not turn the
+    * bars on, and a doubled trailing slash must not turn them off. */
   private[graft] def isCalibratedSf(sfDir: String): Boolean =
     sfDir.split('/').reverseIterator.find(_.nonEmpty).contains("sf0.1")
 
-  /** Crawl-gate violation (BASELINE.md "crawl pair-median >= 0.8"):
-    * non-empty when the banked-pair median efficiency exists (>= 1
-    * clean pair) and misses the 0.8 north-rule bar. No clean pairs →
-    * nothing to flag here; `n_clean_pairs: 0` in the artifact already
-    * says the estimator is absent. */
+  /** Crawl-gate violation (BASELINE.md "crawl run-median >= 0.8"):
+    * non-empty when the median efficiency over this run's `nCleanPairs`
+    * leg pairs (every pair the run measured — none is dropped) misses
+    * the 0.8 north-rule bar. No pairs → no median → nothing to flag. */
   def crawlViolations(pairMedian: Double, nCleanPairs: Int): Seq[String] =
     if (nCleanPairs > 0 && pairMedian < 0.80)
       Seq(f"crawl_pair_median:$pairMedian%.3f<0.8")
     else Nil
 
   /** JSON value for the artifact's `bar_violations` field: a real array
-    * only when the sf0.1 bars actually apply; the literal string
-    * "not_checked" otherwise — an empty array at another sf would read
-    * as "checked and clean" (BASELINE.md's contract for []). `crawl`
-    * carries [[crawlViolations]] when the crawl legs ran: crawl bars are
-    * sf-independent, so they join the array at sf0.1 and force a real
-    * array (never "not_checked") when violated at any other sf. */
+    * only when the sf0.1 bars apply, else the string "not_checked" (an
+    * empty array would read as "checked and clean"). `crawl` carries
+    * [[crawlViolations]]: crawl bars are sf-independent, so they join the
+    * array at sf0.1 and force a real array when violated at any other sf. */
   def barViolationsJson(sfDir: String, times: Seq[(String, Double)],
                         crawl: Seq[String] = Nil): String = {
     def arr(vs: Seq[String]) = vs.map(v => "\"" + v + "\"").mkString("[", ",", "]")
@@ -460,10 +240,15 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // subprocess leg mode: --crawl <cores> <pages> <preSeeded>
-    if (args.length == 4 && args(0) == "--crawl") {
-      val (fetched, secs, warm, init) = crawlLeg(args(1).toInt, args(2).toInt, args(3).toBoolean)
-      println(s"CRAWL_LEG $fetched $secs $warm $init")
+    // subprocess leg mode: --crawl <cores> <pages> <preSeeded> <shm>
+    if (args.length == 5 && args(0) == "--crawl") {
+      val (cores, shm) = (args(1).toInt, args(4).toBoolean)
+      val spark = session(cores)
+      val leg = try {
+        crawlOnce(spark, cores, WarmupPages, args(3).toBoolean, shm)
+        crawlOnce(spark, cores, args(2).toInt, args(3).toBoolean, shm)
+      } finally spark.stop()
+      println(s"CRAWL_LEG ${leg.fetched} ${leg.secs} ${leg.initSecs}")
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -492,174 +277,23 @@ object Bench {
       return
     }
 
-    // 2) north metric: frontier drain at N vs 4N cores. Host noise
-    // spikes runs 2-3x for minutes at a time (it only ever ADDS time),
-    // so: (a) before each leg a single-thread probe waits out co-tenancy
-    // windows (sleep, don't measure, while the probe runs >25% over its
-    // best); (b) legs alternate N/4N for up to three passes, keeping
-    // each side's min — alternation exposes both to the same windows;
-    // (c) stop early once two passes agree the efficiency target is met.
-    var minProbe = probeSecs()
-    var maxProbe = minProbe
-    var minProbe4 = probeSecs(4)
-    var maxProbe4 = minProbe4
-    var minBw = bwProbeSecs()
-    var maxBw = minBw
-    def waitQuiet(): Unit = {
-      var tries = 0
-      var p = probeSecs()
-      var p4 = probeSecs(4)
-      var bw = bwProbeSecs()
-      minProbe = math.min(minProbe, p); maxProbe = math.max(maxProbe, p)
-      minProbe4 = math.min(minProbe4, p4); maxProbe4 = math.max(maxProbe4, p4)
-      minBw = math.min(minBw, bw); maxBw = math.max(maxBw, bw)
-      while (tries < 4 && (p > 1.25 * minProbe || p4 > 1.3 * minProbe4 || bw > 1.3 * minBw)) {
-        Thread.sleep(20000)
-        tries += 1
-        p = probeSecs()
-        p4 = probeSecs(4)
-        bw = bwProbeSecs()
-        minProbe = math.min(minProbe, p); maxProbe = math.max(maxProbe, p)
-        minProbe4 = math.min(minProbe4, p4); maxProbe4 = math.max(maxProbe4, p4)
-        minBw = math.min(minBw, bw); maxBw = math.max(maxBw, bw)
-      }
+    // 2) north metric: same-window (N, 4N) drain pairs, interleaved (N
+    // first, 4N first, ...) so host-speed drift hits neither side alone
+    val shm = shmStaging()
+    def leg(cores: Int): Leg = crawlRun(cores, crawlPages, preSeeded = true, shm)
+    val pairs = (0 until PairsPerRun).map { i =>
+      if (i % 2 == 0) { val n = leg(nCores); (n, leg(n4Cores)) }
+      else { val n4 = leg(n4Cores); (leg(nCores), n4) }
     }
-    val legsN = scala.collection.mutable.ArrayBuffer[Double]()
-    val legs4N = scala.collection.mutable.ArrayBuffer[Double]()
-    var (f1, s1) = (0L, Double.MaxValue)
-    var (f4, s4) = (0L, Double.MaxValue)
-    // bootstrap (init) seconds at each side's best leg — excluded from
-    // the timed drain window, reported for transparency
-    var (init1, init4) = (0.0, 0.0)
-    def eff: Double = ((f4 / s4) / (f1 / s1)) / 4.0
-    // Warmup-gated leg: the in-leg 2000-page warmup crawl is the only
-    // probe that sees the same noise the leg sees (ALU probes measured
-    // quiet through a window where every leg ran 1.7-3x slow). A leg
-    // whose warmup exceeds 1.3x the session-best warmup for its core
-    // count ran inside a noisy window — its time still counts toward
-    // the recorded mins (noise only ADDS time), but the leg is retried
-    // after a pause instead of being trusted.
-    // Session bests are seeded from a ledger cache persisted across
-    // invocations: the first leg of a run otherwise defines its own
-    // "best" and sails through clean even inside a noisy window (the
-    // warmup is always 2000 pages, so values compare across runs). A
-    // stale too-low floor costs at most the retry cap, never a loop.
-    val tBench0 = System.nanoTime()
-    def elapsedMin: Double = (System.nanoTime() - tBench0) / 6e10
-    val bestCache = ledgerDir.resolve(cacheName("graft_bench_best"))
-    val bests = scala.collection.mutable.Map[String, Double]()
-    try {
-      if (java.nio.file.Files.exists(bestCache))
-        new String(java.nio.file.Files.readAllBytes(bestCache), "UTF-8")
-          .linesIterator.map(_.split("\t")).filter(_.length == 2)
-          .foreach(a => bests(a(0)) = a(1).toDouble)
-    } catch { case _: Exception => () }
-    def improve(key: String, v: Double): Double = {
-      // read-merge-write: other writers (a concurrent leg loop, another
-      // bench invocation) update the same cache between our writes, and
-      // a whole-file rewrite from this process's stale map would erase
-      // their better floors (observed: a 81.9 s 1-core floor clobbered
-      // back to 91 s). Min-merging the on-disk state first makes
-      // concurrent writers converge on the per-key minimum.
-      try {
-        if (java.nio.file.Files.exists(bestCache))
-          new String(java.nio.file.Files.readAllBytes(bestCache), "UTF-8")
-            .linesIterator.map(_.split("\t")).filter(_.length == 2)
-            .foreach(a => bests(a(0)) =
-              math.min(bests.getOrElse(a(0), Double.MaxValue), a(1).toDouble))
-      } catch { case _: Exception => () }
-      val b = math.min(bests.getOrElse(key, v), v)
-      bests(key) = b
-      try java.nio.file.Files.write(bestCache,
-        bests.map { case (k, w) => s"$k\t$w" }.mkString("\n").getBytes("UTF-8"))
-      catch { case _: Exception => () }
-      b
-    }
-    def warmBest(cores: Int): Double = bests.getOrElse(s"w$cores", -1.0)
-    // Seed the bandwidth-probe floor from the persisted cache (the probe
-    // is fixed-size, so readings compare across runs): a run launched
-    // entirely inside a bandwidth-noisy window would otherwise adopt the
-    // inflated reading as its own "best" and sail through the gate.
-    minBw = improve("bw4", minBw)
-    // A leg counts as clean only when BOTH its warmup and its own time
-    // land near the best ever recorded for this (cores, pages) — mid-leg
-    // noise after a quiet warmup is common (measured 36 s legs behind
-    // 13 s quiet warmups). Dirty legs still feed the recorded mins
-    // (noise only adds time); they just trigger a retry while the pass/
-    // wall budget lasts.
-    def runLeg(cores: Int): (Double, Double) = {
-      var attempts = 0
-      var clean = false
-      var passBestS = Double.MaxValue
-      var passBestW = Double.MaxValue
-      while (!clean && attempts < 3 && elapsedMin < 18) {
-        waitQuiet()
-        val (f, s, w, ini) = crawlRun(cores, crawlPages, preSeeded = true)
-        val wb = improve(s"w$cores", w)
-        val sb = improve(s"l$cores:$crawlPages", s)
-        if (cores == nCores) { legsN += s; if (s < s1) { f1 = f; s1 = s; init1 = ini } }
-        else { legs4N += s; if (s < s4) { f4 = f; s4 = s; init4 = ini } }
-        if (s < passBestS) { passBestS = s; passBestW = w }
-        clean = w <= 1.25 * wb && s <= 1.15 * sb
-        attempts += 1
-        System.err.println(f"[bench] leg cores=$cores secs=$s%.1f (best $sb%.1f) warm=$w%.1f (best $wb%.1f) clean=$clean")
-        if (!clean && attempts < 3) Thread.sleep(10000)
-      }
-      (passBestS, passBestW)
-    }
-    // Same-window PAIRS: adjacent N/4N legs ran in the same noise window,
-    // so their ratio is robust to symmetric inflation — unlike per-side
-    // minima across invocations, which are biased whenever one side
-    // caught a quieter window than the other ever saw. Every pass's
-    // (bestN, best4N) pair is persisted; at report time the pairs whose
-    // warmups sit within the clean threshold of the CURRENT warmup
-    // floors count as clean, and their median efficiency is reported
-    // alongside the per-side-minima numbers.
-    val pairsFile = ledgerDir.resolve(cacheName("graft_bench_pairs"))
-    def recordPair(sN: Double, wN: Double, s4: Double, w4: Double): Unit =
-      try java.nio.file.Files.write(pairsFile,
-        f"$crawlPages\t$sN%.3f\t$wN%.3f\t$s4%.3f\t$w4%.3f\n".getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Exception => () }
-    // Alternate N/4N passes, min per side, until the target ratio is
-    // met or the pass/wall budget runs out (the budget bounds driver-
-    // side bench time on a hopelessly noisy host).
-    var pass = 0
-    while ((pass < 2 || eff < 0.80) && pass < 5 && elapsedMin < 18) {
-      val (psN, pwN) = runLeg(nCores)
-      val (ps4, pw4) = runLeg(n4Cores)
-      if (psN < Double.MaxValue && ps4 < Double.MaxValue)
-        recordPair(psN, pwN, ps4, pw4)
-      pass += 1
-    }
-    val rateN = f1 / s1
-    val rate4N = f4 / s4
-    // Best-known per-side times across ALL invocations (persisted cache,
-    // monotone minimum): host noise only ever ADDS time and its windows
-    // can outlast one invocation's retry budget (measured: hours), so the
-    // cross-run minimum is the estimator of the quiet-host truth. Both
-    // numbers are reported — `scaling_efficiency` is THIS run's windows,
-    // `scaling_efficiency_best` the cross-run minima (BASELINE.md
-    // "How to read a recorded artifact").
-    val sNBest = math.min(s1, bests.getOrElse(s"l$nCores:$crawlPages", s1))
-    val s4NBest = math.min(s4, bests.getOrElse(s"l$n4Cores:$crawlPages", s4))
-    val effBest = ((crawlPages / s4NBest) / (crawlPages / sNBest)) / 4.0
-    // median efficiency over persisted same-window pairs whose warmups
-    // AND drains land within the clean thresholds of the current floors
-    val (pairMedian, nCleanPairs) =
-      pairStats(pairsFile, crawlPages, warmBest(nCores), warmBest(n4Cores),
-        sNBest, s4NBest)
-    def legsJson(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
+    val (pairMedian, _) = pairEstimate(pairs.map { case (n, n4) => pairEfficiency(n, n4) })
 
     // 3) end-to-end BFS expansion loop at 4N (seed -> discover -> drain)
-    val (fb, sb, _, _) = crawlRun(n4Cores, crawlPages, preSeeded = false)
+    val bfs = crawlRun(n4Cores, crawlPages, preSeeded = false, shm)
 
     val qs = queryTimes.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val total = queryTimes.map(_._2).sum
-    val barsJson = barViolationsJson(sfDir, queryTimes,
-      crawlViolations(pairMedian, nCleanPairs))
+    val barsJson = barViolationsJson(sfDir, queryTimes, crawlViolations(pairMedian, pairs.size))
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"bar_violations":$barsJson,"sf":"$sfDir","crawl":{"mode":"frontier_drain","pages":$crawlPages,"n_cores":$nCores,"4n_cores":$n4Cores,"urls_per_sec_n":$rateN%.1f,"urls_per_sec_4n":$rate4N%.1f,"scaling_efficiency":$eff%.3f,"scaling_efficiency_best":$effBest%.3f,"scaling_efficiency_pair_median":$pairMedian%.3f,"n_clean_pairs":$nCleanPairs,"secs_n_best":$sNBest%.1f,"secs_4n_best":$s4NBest%.1f,"fetched_n":$f1,"fetched_4n":$f4,"secs_n":$s1%.1f,"secs_4n":$s4%.1f,"init_secs_n":$init1%.1f,"init_secs_4n":$init4%.1f,"host_probe_min":$minProbe%.3f,"host_probe_max":$maxProbe%.3f,"host_probe4_min":$minProbe4%.3f,"host_probe4_max":$maxProbe4%.3f,"host_bw_min":$minBw%.3f,"host_bw_max":$maxBw%.3f,"warmup_best_n":${warmBest(nCores)}%.2f,"warmup_best_4n":${warmBest(n4Cores)}%.2f,"legs_n_secs":${legsJson(legsN.toSeq)},"legs_4n_secs":${legsJson(legs4N.toSeq)},"bfs_pages":$fb,"bfs_secs":$sb%.1f,"bfs_urls_per_sec_4n":${fb / sb}%.1f}}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"bar_violations":$barsJson,"sf":"$sfDir","crawl":${crawlJson(crawlPages, nCores, pairs, bfs)}}""")
   }
 }

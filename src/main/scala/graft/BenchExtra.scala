@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 
 /** Supplementary measurement harness for the optimization rounds
   * (guide §1: measure first, isolate with the noop sink, capture
@@ -20,35 +19,16 @@ import org.apache.spark.sql.SparkSession
   *    sink (`df.write.format("noop")`), which computes every column
   *    (guide §1.4) — catches work `count()` lets the optimizer prune.
   *
-  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS, as the frozen bench.
+  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS (and SPARK_GRAFT_MASTER),
+  * as `graft.Bench`, whose session builder and headline list it uses.
   */
 object BenchExtra {
-
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-extra-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  private val headline = Seq(
-    "q01_agg", "q02_join_broadcast", "q05_first_seen", "q13_token_freq",
-    "q21_minhash_lsh", "q22_simhash", "q24_knn_cosine", "q31_sessionize",
-    "q45_ivf_ann", "q59_phash_pairs", "q60_chunk_dedup", "q62_pack_sequences",
-    "q73_image_dup_clusters", "q77_asof_join", "q79_clip_align",
-    "q83_crossmodal", "q84_tfidf_pairs", "q95_dup_spans")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val mode = if (args.nonEmpty) args(0) else "time"
-    val spark = session(cpus)
+    val spark = Bench.session(cpus)
     try {
       mode match {
         case "plans" =>
@@ -65,7 +45,7 @@ object BenchExtra {
           }
         case "time" | "noop" =>
           val repeats = if (args.length > 1) args(1).toInt else 3
-          val names = if (args.length > 2) args.drop(2).toSeq else headline
+          val names = if (args.length > 2) args.drop(2).toSeq else Bench.headline
           val results = names.map { name =>
             val fn = SparkEntry.queries(name)
             def action(): Unit =

@@ -2,17 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench.pairStats — the same-window paired-efficiency estimator read
-  * by the bench artifact (no Spark involved). */
+/** Bench's pure parts — the per-run pair estimator, the crawl gate, the
+  * regression bars and the artifact's `crawl` object (no Spark involved). */
 class BenchPairSpec extends AnyFunSuite {
+  import Bench.Leg
 
-  private def withFile(lines: Seq[String])(f: java.nio.file.Path => Unit): Unit = {
-    val p = java.nio.file.Files.createTempFile("pairs", ".tsv")
-    try {
-      java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
-      f(p)
-    } finally java.nio.file.Files.deleteIfExists(p)
-  }
+  /** (N, 4N) legs draining 100k pages in `sN` / `s4` seconds. */
+  private def pair(sN: Double, s4: Double): (Leg, Leg) =
+    (Leg(100000L, sN, 4.0), Leg(100000L, s4, 2.0))
 
   test("regression bars: per-query and suite violations are reported, clean run is empty") {
     // bars pinned in BASELINE.md "Regression bars"; the artifact carries
@@ -28,70 +25,6 @@ class BenchPairSpec extends AnyFunSuite {
     assert(v.exists(_.startsWith("total:18.60>18.0")), v.toString)
     // a query with no bar never violates
     assert(!v.exists(_.startsWith("q01")))
-  }
-
-  test("median over clean pairs; dirty warmups and other page counts excluded") {
-    val lines = Seq(
-      "100000\t80.000\t21.0\t25.000\t11.0",  // clean: eff 0.80
-      "100000\t90.000\t20.5\t30.000\t10.8",  // clean: eff 0.75
-      "100000\t70.000\t21.0\t20.000\t10.7",  // clean: eff 0.875
-      "100000\t100.000\t29.0\t35.000\t15.0", // dirty both warmups
-      "2000\t8.000\t21.0\t4.000\t10.7")      // other page count
-    withFile(lines) { p =>
-      val (med, n) = Bench.pairStats(p, 100000L, wbN = 20.0, wb4 = 10.0)
-      assert(n == 3)
-      assert(math.abs(med - 0.80) < 1e-9) // sorted effs: .75 .80 .875
-    }
-  }
-
-  test("drain floors gate pairs whose warmups were quiet but drains were not") {
-    // a noise burst arriving AFTER the warmup inflates the drain only:
-    // with drain floors supplied, such pairs must not count
-    val lines = Seq(
-      "100000\t80.000\t21.0\t25.000\t11.0",  // clean: eff 0.80
-      "100000\t81.000\t21.0\t87.000\t11.0",  // quiet warmups, 4N drain 3.5x floor
-      "100000\t140.000\t21.0\t25.000\t11.0") // quiet warmups, N drain 1.75x floor
-    withFile(lines) { p =>
-      // without drain floors all three count (legacy behavior)
-      assert(Bench.pairStats(p, 100000L, 20.0, 10.0)._2 == 3)
-      val (med, n) = Bench.pairStats(p, 100000L, 20.0, 10.0,
-        sbN = 80.0, sb4 = 25.0)
-      assert(n == 1)
-      assert(math.abs(med - 0.80) < 1e-9)
-    }
-  }
-
-  test("drain gate is 1.15x: a 20%-over drain is excluded, 10%-over kept") {
-    val lines = Seq(
-      "100000\t80.000\t21.0\t27.500\t11.0",  // 4N drain 1.10x floor: kept
-      "100000\t80.000\t21.0\t30.000\t11.0")  // 4N drain 1.20x floor: excluded
-    withFile(lines) { p =>
-      val (med, n) = Bench.pairStats(p, 100000L, 20.0, 10.0,
-        sbN = 80.0, sb4 = 25.0)
-      assert(n == 1)
-      assert(math.abs(med - 80.0 / 27.5 / 4.0) < 1e-9)
-    }
-  }
-
-  test("one dirty side disqualifies the pair") {
-    val lines = Seq("100000\t80.000\t21.0\t25.000\t14.0") // 4N warmup 40% over
-    withFile(lines) { p =>
-      assert(Bench.pairStats(p, 100000L, 20.0, 10.0) == (-1.0, 0))
-    }
-  }
-
-  test("a torn line does not discard the valid pairs around it") {
-    // the pairs file is appended by concurrent invocations with no
-    // locking — a process killed mid-append leaves a partial line
-    val lines = Seq(
-      "100000\t80.000\t21.0\t25.000\t11.0", // clean: eff 0.80
-      "100000\t90.0\t21",                   // torn mid-append
-      "100000\t70.000\t21.0\t20.000\t10.7") // clean: eff 0.875
-    withFile(lines) { p =>
-      val (med, n) = Bench.pairStats(p, 100000L, wbN = 20.0, wb4 = 10.0)
-      assert(n == 2)
-      assert(math.abs(med - 0.875) < 1e-9)
-    }
   }
 
   test("barViolationsJson: real array only at sf0.1, not_checked elsewhere") {
@@ -135,15 +68,60 @@ class BenchPairSpec extends AnyFunSuite {
     assert(Bench.barViolationsJson("/root/testdata/sf0.1//", clean) == "[]")
   }
 
-  test("missing file, malformed lines, unset floors -> (-1, 0)") {
-    assert(Bench.pairStats(
-      java.nio.file.Paths.get("/tmp/definitely-missing-pairs.tsv"),
-      100000L, 20.0, 10.0) == (-1.0, 0))
-    withFile(Seq("garbage", "100000\tx\ty\tz\tw")) { p =>
-      assert(Bench.pairStats(p, 100000L, 20.0, 10.0) == (-1.0, 0))
-    }
-    withFile(Seq("100000\t80.000\t21.0\t25.000\t11.0")) { p =>
-      assert(Bench.pairStats(p, 100000L, -1.0, 10.0) == (-1.0, 0))
-    }
+  test("pairEstimate: median and spread for odd and even K") {
+    val (m3, sp3) = Bench.pairEstimate(Seq(0.90, 0.78, 0.84))
+    assert(math.abs(m3 - 0.84) < 1e-12)
+    assert(math.abs(sp3 - 0.12) < 1e-12)
+    // even K: mean of the middle two
+    val (m4, sp4) = Bench.pairEstimate(Seq(0.80, 0.70, 0.90, 0.86))
+    assert(math.abs(m4 - 0.83) < 1e-12)
+    assert(math.abs(sp4 - 0.20) < 1e-12)
+    assert(Bench.pairEstimate(Seq(0.81)) == (0.81, 0.0))
+    assertThrows[IllegalArgumentException](Bench.pairEstimate(Nil))
+    // a pair's efficiency is (rate4N / rateN) / 4
+    val (n, n4) = pair(64.0, 16.0)
+    assert(math.abs(Bench.pairEfficiency(n, n4) - 1.0) < 1e-12)
+  }
+
+  test("a drain regression is visible: 4N drains 20% slower flag the run median") {
+    // pairs at ~0.84, as on a healthy tree
+    val healthy = Seq(pair(64.0, 19.0), pair(66.0, 19.6), pair(63.5, 19.0))
+    val (before, _) = Bench.pairEstimate(healthy.map { case (n, n4) => Bench.pairEfficiency(n, n4) })
+    assert(before > 0.83 && before < 0.85, before)
+    assert(Bench.crawlViolations(before, healthy.size).isEmpty)
+    // the same run with every 4N drain 20% slower: no pair can be dropped
+    // as dirty, so the median moves with the code and the gate fires
+    val slowed = healthy.map { case (n, n4) => (n, n4.copy(secs = n4.secs * 1.2)) }
+    val (after, _) = Bench.pairEstimate(slowed.map { case (n, n4) => Bench.pairEfficiency(n, n4) })
+    assert(math.abs(after - before / 1.2) < 1e-9)
+    val v = Bench.crawlViolations(after, slowed.size)
+    assert(v == Seq(f"crawl_pair_median:$after%.3f<0.8"), v.toString)
+  }
+
+  test("crawlJson: every surviving key present, dropped keys absent, output parses") {
+    val pairs = Seq(pair(66.0, 19.0), pair(64.0, 19.5), pair(65.0, 20.0))
+    val bfs = Leg(100000L, 30.0, 3.0)
+    val json = Bench.crawlJson(100000, 1, pairs, bfs)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val surviving = Seq("mode", "pages", "n_cores", "4n_cores", "urls_per_sec_n",
+      "urls_per_sec_4n", "scaling_efficiency", "fetched_n", "fetched_4n", "secs_n",
+      "secs_4n", "init_secs_n", "init_secs_4n", "legs_n_secs", "legs_4n_secs",
+      "bfs_pages", "bfs_secs", "bfs_urls_per_sec_4n",
+      "pair_efficiencies", "scaling_efficiency_run_median", "scaling_efficiency_run_spread")
+    surviving.foreach(k => assert(node.has(k), s"missing $k in $json"))
+    val dropped = Seq("host_probe", "host_bw_", "warmup_best_", "_best",
+      "scaling_efficiency_pair_median", "n_clean_pairs")
+    val names = scala.jdk.CollectionConverters.IteratorHasAsScala(node.fieldNames()).asScala.toSeq
+    dropped.foreach(d => assert(!names.exists(_.contains(d)), s"dropped key $d in $json"))
+    assert(names.size == surviving.size)
+    // per-side minima: 64.0 s (N) and 19.0 s (4N)
+    assert(node.get("secs_n").asDouble == 64.0 && node.get("secs_4n").asDouble == 19.0)
+    assert(math.abs(node.get("scaling_efficiency").asDouble - 0.842) < 1e-9)
+    assert(node.get("4n_cores").asInt == 4 && node.get("mode").asText == "frontier_drain")
+    // legs in run order, one efficiency per pair, gated median in between
+    assert(node.get("legs_4n_secs").toString == "[19.0,19.5,20.0]")
+    assert(node.get("pair_efficiencies").size == pairs.size)
+    assert(math.abs(node.get("scaling_efficiency_run_median").asDouble - 0.821) < 1e-9)
+    assert(math.abs(node.get("scaling_efficiency_run_spread").asDouble - 0.056) < 1e-9)
   }
 }
