@@ -25,9 +25,21 @@ import org.apache.spark.sql.types.StructType
  * Layout:
  * {{{
  *   root/meta/_head                  <- current snapshot id (atomic swap)
- *   root/meta/snap-<id>.manifest     <- TSV: table -> list of data dirs
+ *   root/meta/snap-<id>.manifest     <- TSV: table -> data dirs + (rows, bytes, files)
  *   root/<table>/d<id>/              <- parquet delta written by commit <id>
+ *   root/<table>/s<uuid>/            <- delta pre-written by [[stage]]
+ *   root/<table>/c<id>/              <- rewrite written by [[compact]]
+ *   root/<table>/<dir>/part-<pid>-<uuid>.parquet   <- one file per non-empty task
  * }}}
+ *
+ * Every data dir is written by [[DeltaWriter]]: each task writes its
+ * partition to a hidden `_part-…` file and reports (file, rows, bytes)
+ * to the driver, which renames the reported files to `part-…` and
+ * deletes the rest. There is no `_SUCCESS` marker and no `_temporary`
+ * dir — the manifest swap is the commit. The manifest's stats for the
+ * dirs a commit or compaction writes are the writer's reported counts,
+ * not a re-read of the footers; a staged dir's are read from its footers
+ * when it is committed.
  *
  * Tables are append-only (deltas union at read); the crawl pipeline's
  * tables are all logs (frontier, fetchlog, images, metrics, lineage),
@@ -82,7 +94,7 @@ class IceLite(val root: String) {
   def stage(table: String, df: DataFrame): String = {
     val dir = Paths.get(root, table,
       s"s${java.util.UUID.randomUUID().toString.take(12)}").toString
-    df.write.mode("overwrite").parquet(dir)
+    DeltaWriter.write(df, dir)
     dir
   }
 
@@ -105,16 +117,14 @@ class IceLite(val root: String) {
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       Await.result(Future.traverse(deltas) { case (table, df) =>
-        Future {
-          val dir = Paths.get(root, table, s"d$id").toString
-          df.write.mode("overwrite").parquet(dir)
-          table -> dir
-        }
+        Future(table -> DeltaWriter.write(df, Paths.get(root, table, s"d$id").toString))
       }, Duration.Inf)
     }
-    // footer stats for every new dir (driver-side metadata read, no job)
-    val merged = (newDirs ++ staged).foldLeft(prev) { case (acc, (t, dir)) =>
-      acc + (t -> (acc.getOrElse(t, Seq.empty) :+ ParquetStats.dirStat(dir)))
+    // the writer's counts for the dirs written here; footer stats for the
+    // staged dirs (driver-side metadata read, no job)
+    val stagedDirs = staged.map { case (t, dir) => t -> ParquetStats.dirStat(dir) }
+    val merged = (newDirs ++ stagedDirs).foldLeft(prev) { case (acc, (t, st)) =>
+      acc + (t -> (acc.getOrElse(t, Seq.empty) :+ st))
     }
 
     publish(id, parent, meta, merged)
@@ -175,10 +185,8 @@ class IceLite(val root: String) {
         val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
         val dir = Paths.get(root, table, s"c$id").toString
         // coalesce, not repartition: file-count reduction needs no shuffle
-        spark.read.parquet(dirs: _*).coalesce(nFiles)
-          .write.mode("overwrite").parquet(dir)
-        val merged = m.stats - table +
-          (table -> Seq(ParquetStats.dirStat(dir)))
+        val st = DeltaWriter.write(spark.read.parquet(dirs: _*).coalesce(nFiles), dir)
+        val merged = m.stats - table + (table -> Seq(st))
         Some(publish(id, Some(head), m.meta + ("compacted" -> table), merged))
       }
     }

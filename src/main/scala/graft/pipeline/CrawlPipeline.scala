@@ -45,7 +45,7 @@ case class CrawlConfig(
  * One wave:
  * {{{
  *  pending  = frontier ANTI-JOIN fetchlog            (not yet fetched)
- *  robots   ⟕ broadcast join on host; disallowed → fetchlog(robots_denied)
+ *  robots   = host lookup in a broadcast rules table; disallowed → fetchlog(robots_denied)
  *  budget   = max(1, floor(waveSeconds / crawl_delay)) per host
  *  selected = row_number over (host ORDER BY depth, seq) <= budget   (politeness O1/§2.8)
  *  fetch    = salted repartition by (host, seq%salt) → mapPartitions  (hot-host skew defused)
@@ -148,9 +148,10 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
   def pending(): DataFrame =
     frontierDf.join(flogKeys, Seq("url"), "left_anti")
 
-  private def robotsDf: DataFrame =
-    robots.map(r => (r.host, r.effectiveRules, r.crawlDelay, r.robotsFailed))
-      .toDF("host", "rules", "crawl_delay", "robots_failed")
+  // host -> (rules, crawl_delay, robots_failed), built and broadcast
+  // once per pipeline; a hash probe per row (see [[graft.robots.HostRules]])
+  private val robotsByHost: Column =
+    graft.robots.HostRules.lookup(spark, robots, $"host")
 
   // ---------- one wave ----------
 
@@ -195,8 +196,8 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // drain) ⇒ pending == frontier; skip the anti-join shuffle entirely
     val pend = if (logged == 0L) frontierDf else pending()
 
-    // robots broadcast join (J3) + disallow predicate (F4); permissive
-    // default when no robots row (`crawler/crawler_node.py:49-52`).
+    // robots lookup (J3) + disallow predicate (F4); permissive default
+    // when the host has no robots entry (`crawler/crawler_node.py:49-52`).
     // Pure column logic — url_path is a codegen expression and the
     // prefix test an `exists` over the tiny prefix array (no Scala UDF
     // closure on the highest-volume filter). The path is materialized
@@ -204,11 +205,14 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // prefix element.
     // Lazy checkpoint: the anti-join (frontier vs fetchlog) executes once
     // and is reused by both the fetch path and the denied-audit path.
-    // With no robots rules at all, the join is the identity and `denied`
-    // empty by construction — skip the join AND the checkpoint
+    // With no robots rules at all, the lookup is the identity and `denied`
+    // empty by construction — skip the lookup AND the checkpoint
     // materialization (100k+ rows through the block manager per wave).
     val (allowed, deniedOpt) = if (robots.isEmpty) (pend, None) else {
-      val joined = pend.join(broadcast(robotsDf), Seq("host"), "left")
+      val joined = pend // all three null for a host without robots
+        .withColumn("rules", robotsByHost("_1"))
+        .withColumn("crawl_delay", robotsByHost("_2"))
+        .withColumn("robots_failed", robotsByHost("_3"))
         .withColumn("__path", url_path($"url"))
         .localCheckpoint(false)
       // ordered first-match-wins rules (full RobotFileParser semantics,
@@ -323,14 +327,16 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // intra-wave first-seen-wins: pages are conceptually processed in
     // (depth, seq) order, links in document order, so the winning
     // discovery is min (parent_depth, parent_seq, pos) per canonical URL
-    // Persisted: the two-stage seen-filter fans this into two branches
-    // (definitely-new / maybe-seen). The probe predicate references only
-    // the groupBy key, so Catalyst pushes each branch's filter BELOW the
-    // aggregation — the branches' exchange subtrees then differ and
-    // ReuseExchange cannot dedupe them, recomputing the full link
-    // explode + canonicalize (the wave's widest map stage) once per
-    // branch. Materializing the post-agg rows (small: distinct URLs
-    // only) runs that stage exactly once.
+    // Materialized by an eager localCheckpoint: the two-stage seen-filter
+    // fans this into two branches (definitely-new / maybe-seen). The probe
+    // predicate references only the groupBy key, so Catalyst would push
+    // each branch's filter BELOW the aggregation — the branches' exchange
+    // subtrees then differ and ReuseExchange cannot dedupe them,
+    // recomputing the full link explode + canonicalize (the wave's widest
+    // map stage) once per branch. Checkpointing the post-agg rows (small:
+    // distinct URLs only) runs that stage exactly once, in one job, and
+    // both branches then scan the checkpoint without a job of their own
+    // (a persisted relation costs each branch a cache-stage job).
     // The parent URL string is deliberately NOT in the min-struct: it is
     // recoverable from parent_seq (seq is unique per fetched page), so
     // carrying it would widen the wave's widest shuffle (links ≈ 20× the
@@ -342,7 +348,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       .agg(min(struct($"parent_depth", $"parent_seq", $"pos")).as("m"))
       .select($"url", $"m.parent_depth", $"m.parent_seq", $"m.pos",
         ($"m.parent_depth" + 1).as("depth"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
 
     // J1 two-stage dedup vs everything ever enqueued. Below the
     // threshold: one driver-maintained broadcast sketch (merged after
@@ -403,7 +409,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       Some(dir)
     }
     novelP.unpersist(blocking = false)
-    candidates.unpersist(blocking = false)
+    CrawlPipeline.releaseCheckpoint(candidates)
     val nNew = stagedFrontierDirOpt
       .map(d => graft.icelite.ParquetStats.dirStat(d).rows).getOrElse(0L)
 
@@ -419,7 +425,9 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     val flog = deniedOpt match {
       case None => fetched.drop("bytes", "caption", "outLinks")
       case Some(denied) =>
-        val deniedLog = denied.select($"url", $"host", $"depth", $"seq").distinct()
+        // no distinct: pending URLs are unique because frontier URLs are
+        // (first-seen dedup + the seen-filter admit each URL once)
+        val deniedLog = denied.select($"url", $"host", $"depth", $"seq")
           .as[(String, String, Int, Long)]
           .map { case (url, host, depth, seq) =>
             FetchOut(url, host, depth, seq, -1, success = false,
@@ -456,12 +464,13 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       CrawlPipeline.crawlDateCol($"wave").as("crawl_date"))
 
     // metrics + lineage Δ (A1 counters, per-partition attribution).
-    // Both are aggregates of the same staged scan at different grains;
-    // one pass computes the finer (wave, partition, executor) grain and
-    // is materialized (localCheckpoint — one row per fetch task, trivially
-    // small), then metrics re-aggregates those rows driver-free. Written
-    // separately, each table's commit job would re-scan the staged
-    // parquet — two full column-pruned scans where one suffices.
+    // Both come from one aggregate of the staged scan at the (wave,
+    // partition, executor) grain, materialized once (localCheckpoint —
+    // one row per fetch task, trivially small); written separately, each
+    // table's commit job would re-scan the staged parquet. Metrics is a
+    // projection of those rows, not a re-aggregation by (wave,
+    // partitionId): each partition id comes from exactly one successful
+    // fetch task, so it has exactly one executor and one row here.
     val perPart = fetched.groupBy($"wave", $"pid".as("partitionId"), $"executor")
       .agg(sum(when($"success", 1L).otherwise(0L)).as("fetched"),
         sum(when(!$"success", 1L).otherwise(0L)).as("failed"),
@@ -469,10 +478,8 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
         sum($"nBytes").as("bytesWritten"),
         count(lit(1)).as("nRows"))
       .localCheckpoint()
-    val metrics = perPart.groupBy($"wave", $"partitionId")
-      .agg(sum($"fetched").as("fetched"), sum($"failed").as("failed"),
-        sum($"linksExtracted").as("linksExtracted"),
-        sum($"bytesWritten").as("bytesWritten"))
+    val metrics = perPart
+      .select($"wave", $"partitionId", $"fetched", $"failed", $"linksExtracted", $"bytesWritten")
       .withColumn("newUrls", lit(null).cast("long"))
     val lineage = perPart
       .select($"wave", $"partitionId", $"executor", $"nRows")
@@ -556,6 +563,14 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 }
 
 object CrawlPipeline {
+  /** Frees the blocks of an eager `localCheckpoint()`. `unpersist` on the
+    * checkpointed Dataset does not: it only drops cache-manager entries,
+    * and the blocks belong to the RDD under its `LogicalRDD`. */
+  private def releaseCheckpoint(ds: Dataset[_]): Unit = ds.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
   /** Deterministic crawl clock origin (2025-01-01T00:00:00Z): indexed
     * docs stamp `crawl_date` = epoch + wave seconds, keeping resume
     * re-runs byte-identical where the reference's `time.strftime`

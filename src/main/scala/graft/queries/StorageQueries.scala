@@ -13,8 +13,8 @@ object StorageQueries {
 
   /** q40: commit the test tables into a scratch IceLite store, then
     * answer per-table row counts purely from the manifest file stats
-    * (the parquet data is never re-scanned — footer metadata recorded
-    * at commit time is the only source). */
+    * (the parquet data is never re-scanned — the row counts IceLite's
+    * writer reported at commit time are the only source). */
   def q40StorageStats(s: SparkSession, d: String): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("q40-icelite").toString
     val store = new IceLite(root)

@@ -231,6 +231,31 @@ class CrawlParitySpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("job budget: a politeness-bound tail wave that discovers and denies nothing runs <= 14 jobs") {
+    // a tail wave (no discoveries, no denials) runs only the wave's fixed
+    // path — pending anti-join, politeness rank, salted fetch + images
+    // stage, discover and seen-filter, the commit's writes — so a change
+    // that adds a Spark job to every wave shows here
+    val root = Files.createTempDirectory("crawlJ").toString
+    val p = newPipeline(root)
+    p.init(web.seeds)
+    val perWave = Iterator.from(1).map { w =>
+      var n = 0L
+      val jobs = SparkTestBase.jobsDuring { n = p.runWave(w) }
+      (w, n, jobs)
+    }.takeWhile(_._2 > 0).toVector
+    val st = new IceLite(root)
+    val denied = st.read(spark, "fetchlog").filter($"status" === -1)
+      .select($"wave").as[Int].collect().toSet
+    val noNew = st.history.map(st.commitMeta).filter(_.get("new_urls").contains("0"))
+      .flatMap(_.get("wave").map(_.toInt)).toSet
+    val tail = perWave.filter { case (w, _, _) => noNew(w) && !denied(w) }
+    assert(tail.nonEmpty, s"no tail wave in $perWave")
+    tail.foreach { case (w, n, jobs) =>
+      assert(jobs <= 14, s"tail wave $w ($n pages) ran $jobs Spark jobs; all waves: $perWave")
+    }
+  }
+
   test("resume-from-snapshot: killing after 2 waves and resuming is equivalent") {
     val rootA = Files.createTempDirectory("crawlA").toString
     val pA = newPipeline(rootA)

@@ -2,14 +2,11 @@ package graft
 
 import java.io.{File, IOException}
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.icelite.{IceLite, ParquetStats}
 
@@ -70,45 +67,15 @@ class ParquetStatsSpec extends AnyFunSuite {
     intercept[IOException](ParquetStats.dirStat(dir.toString))
   }
 
-  /** Spark jobs started by `body` on this thread (tagged through a local
-    * property). A sentinel job tagged the same way runs last; once the
-    * listener has seen it, every earlier job of `body` has been seen. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.probe"
-    val jobs = new AtomicInteger
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("sentinel") => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      body
-      sc.setLocalProperty(key, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a schema-bound IceLite read of a committed table runs no Spark job") {
     val store = new IceLite(Files.createTempDirectory("icelite").toString)
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     store.commit(Seq("a" -> df))
     store.commit(Seq("a" -> df))
     // the control: without a schema the read infers one, with a job
-    assert(jobsDuring(store.read(spark, "a")) >= 1)
+    assert(SparkTestBase.jobsDuring(store.read(spark, "a")) >= 1)
     var bound: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { bound = store.read(spark, "a", None, Some(df.schema)) } == 0)
+    assert(SparkTestBase.jobsDuring { bound = store.read(spark, "a", None, Some(df.schema)) } == 0)
     assert(bound.schema.fieldNames.toSeq == Seq("id", "v"))
     assert(bound.count() == 200)
   }

@@ -143,4 +143,32 @@ class RobotsTxtSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("HostRules: every host of a 5000-host table looks up its own rule, codegen and interpreted") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val robots = (0 until 5000).map { i =>
+      if (i % 3 == 0) RobotsTxt.failed(s"h$i.test")
+      else graft.model.RobotsRule(s"h$i.test", Seq(s"/p$i/"), 1.0 + i % 7)
+    }
+    intercept[IllegalArgumentException](
+      graft.robots.HostRules.lookup(spark, robots :+ robots(7), col("host")))
+    val rule = graft.robots.HostRules.lookup(spark, robots, col("host"))
+    val hosts = (0 until 5200 by 13).map(i => s"h$i.test") :+ null
+    val want = robots.map(r => r.host -> ((r.effectiveRules.map(_.path), r.crawlDelay, r.robotsFailed))).toMap
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val got = hosts.toDF("host")
+          .select($"host", rule("_1").getField("path").as("paths"), rule("_2").as("delay"), rule("_3").as("failed"))
+          .collect().map(r => Option(r.getString(0)) -> (
+            if (r.isNullAt(3)) None
+            else Some((r.getSeq[String](1), r.getDouble(2), r.getBoolean(3))))).toMap
+        hosts.foreach { h =>
+          assert(got(Option(h)) == Option(h).flatMap(want.get), s"$mode host $h")
+        }
+      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
 }
