@@ -26,46 +26,6 @@ object Bench {
   /** Pages of the same-plan warmup crawl before each timed leg (JIT + codegen). */
   private val WarmupPages = 2000
 
-  private[graft] def session(cores: Int): SparkSession = {
-    // SPARK_GRAFT_MASTER overrides the master URL ({cores} substituted).
-    // `local-cluster[{cores},1,<mb>]` runs one 1-core executor JVM per
-    // "node", the closest local rendition of "N vs 4N executors". It needs
-    // SPARK_HOME and SPARK_SCALA_VERSION=2.13 exported: the in-process
-    // Worker builds executor commands through the dist's command builder.
-    // Not the default: it costs ~15% wall vs local[k] (netty shuffle,
-    // per-executor JIT), but avoids 4 task threads sharing a young gen.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "") match {
-      case "" | "local" => s"local[$cores]"
-      case tpl          => tpl.replace("{cores}", cores.toString)
-    }
-    val b = SparkSession.builder().master(master)
-    if (master.startsWith("local-cluster")) {
-      // forked executors start from the bare Spark-dist classpath: hand
-      // them the app classes (absolute — they run from their own scratch
-      // dir) and the driver's JDK-17 module opens (build.sbt javaOptions)
-      val absCp = System.getProperty("java.class.path")
-        .split(java.io.File.pathSeparator)
-        .map(p => new java.io.File(p).getAbsolutePath)
-        .mkString(java.io.File.pathSeparator)
-      b.config("spark.executor.extraClassPath", absCp)
-      val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.toArray.map(_.toString)
-        .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports") ||
-          a.startsWith("--enable-native-access"))
-        .mkString(" ")
-      if (opens.nonEmpty) b.config("spark.executor.extraJavaOptions", opens)
-    }
-    val s = b
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** Stage crawl payloads on RAM-backed /dev/shm when present and roomy:
     * one shared disk (a real 4N cluster has 4x the disks) adds a serial
     * term to both legs that deflates the scaling ratio; the payload write
@@ -243,7 +203,7 @@ object Bench {
     // subprocess leg mode: --crawl <cores> <pages> <preSeeded> <shm>
     if (args.length == 5 && args(0) == "--crawl") {
       val (cores, shm) = (args(1).toInt, args(4).toBoolean)
-      val spark = session(cores)
+      val spark = LocalSession(s"graft-bench-$cores", cores)
       val leg = try {
         crawlOnce(spark, cores, WarmupPages, args(3).toBoolean, shm)
         crawlOnce(spark, cores, args(2).toInt, args(3).toBoolean, shm)
@@ -258,7 +218,7 @@ object Bench {
     val n4Cores = nCores * 4
 
     // 1) headline query timings
-    val spark = session(cpus)
+    val spark = LocalSession(s"graft-bench-$cpus", cpus)
     val queryTimes = try {
       headline.filter(SparkEntry.queries.contains).map { name =>
         val fn = SparkEntry.queries(name)

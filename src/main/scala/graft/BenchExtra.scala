@@ -20,7 +20,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    (guide §1.4) — catches work `count()` lets the optimizer prune.
   *
   * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS (and SPARK_GRAFT_MASTER),
-  * as `graft.Bench`, whose session builder and headline list it uses.
+  * as `graft.Bench`, whose session settings and headline list it uses.
   */
 object BenchExtra {
 
@@ -28,7 +28,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val mode = if (args.nonEmpty) args(0) else "time"
-    val spark = Bench.session(cpus)
+    val spark = LocalSession(s"graft-bench-$cpus", cpus)
     try {
       mode match {
         case "plans" =>

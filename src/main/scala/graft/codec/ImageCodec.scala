@@ -418,12 +418,4 @@ object ImageCodec {
       y += 1
     }
   }
-
-  /** Allocating wrappers (test/tooling convenience). */
-  def dct8x8(sp: Array[Double]): Array[Double] = {
-    val out = new Array[Double](64); dct8x8Into(sp, new Array[Double](64), out); out
-  }
-  def idct8x8(fq: Array[Double]): Array[Double] = {
-    val out = new Array[Double](64); idct8x8Into(fq, new Array[Double](64), out); out
-  }
 }

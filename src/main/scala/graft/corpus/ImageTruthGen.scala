@@ -1,7 +1,5 @@
 package graft.corpus
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * One-shot generator for the committed golden fixture
  * `fixtures/image_truth.parquet` — the q47 oracle (VERDICT r3 "What's
@@ -23,13 +21,8 @@ object ImageTruthGen {
     // so the next sweep scale-up does not silently out-range the oracle
     val maxId = if (args.length > 0) args(0).toLong else 100000L
     val outFile = if (args.length > 1) args(1) else "fixtures/image_truth.parquet"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("image-truth-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession("image-truth-gen",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     try {
       val ids = spark.range(0L, maxId).toDF("doc_id")
       val truth = graft.queries.SimQueries.imageFeaturesForIds(spark, ids)

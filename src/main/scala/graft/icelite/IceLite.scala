@@ -52,7 +52,14 @@ class IceLite(val root: String) {
 
   case class Manifest(id: Long, parent: Long, meta: Map[String, String],
                       tables: Map[String, Seq[String]],
-                      stats: Map[String, Seq[ParquetStats.DirStat]])
+                      stats: Map[String, Seq[ParquetStats.DirStat]]) {
+    /** (rows, bytes, files) summed over `table`'s dirs; (0, 0, 0) for a
+      * table with no data at this snapshot. */
+    def totals(table: String): (Long, Long, Long) = {
+      val ds = stats.getOrElse(table, Seq.empty)
+      (ds.map(_.rows).sum, ds.map(_.bytes).sum, ds.map(_.files.toLong).sum)
+    }
+  }
 
   private def headPath: Path = metaDir.resolve("_head")
   private def manifestPath(id: Long): Path = metaDir.resolve(s"snap-$id.manifest")
@@ -62,8 +69,11 @@ class IceLite(val root: String) {
       Some(new String(Files.readAllBytes(headPath), StandardCharsets.UTF_8).trim.toLong)
     else None
 
+  /** Parses manifest `id`; a line of no known shape fails the read, naming
+    * the file — skipping it would drop its table's rows from every read. */
   def manifest(id: Long): Manifest = {
-    val lines = Files.readAllLines(manifestPath(id), StandardCharsets.UTF_8).asScala
+    val path = manifestPath(id)
+    val lines = Files.readAllLines(path, StandardCharsets.UTF_8).asScala
     var parent = -1L
     val meta = scala.collection.mutable.Map[String, String]()
     val tables = scala.collection.mutable.Map[String, Vector[String]]()
@@ -76,12 +86,10 @@ class IceLite(val root: String) {
       l.split("\t", -1).toList match {
         case "parent" :: p :: Nil        => parent = p.toLong
         case "meta" :: k :: v :: Nil     => meta(k) = v
-        // stats-bearing entry: table <name> <dir> <rows> <bytes> <files>
+        // table <name> <dir> <rows> <bytes> <files>
         case "table" :: name :: dir :: rows :: bytes :: files :: Nil =>
           add(name, dir, ParquetStats.DirStat(dir, rows.toLong, bytes.toLong, files.toInt))
-        case "table" :: name :: dir :: Nil => // pre-stats manifest line
-          add(name, dir, ParquetStats.DirStat(dir, -1L, -1L, -1))
-        case _ => ()
+        case _ => throw new IllegalStateException(s"$path: unrecognised manifest line: $l")
       }
     }
     Manifest(id, parent, meta.toMap, tables.toMap, stats.toMap)
@@ -181,7 +189,7 @@ class IceLite(val root: String) {
       if (dirs.size <= 1) None
       else {
         val id = head + 1L
-        val totalBytes = m.stats.getOrElse(table, Seq.empty).map(_.bytes).filter(_ > 0).sum
+        val totalBytes = m.stats.getOrElse(table, Seq.empty).map(_.bytes).sum
         val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
         val dir = Paths.get(root, table, s"c$id").toString
         // coalesce, not repartition: file-count reduction needs no shuffle
@@ -203,6 +211,13 @@ class IceLite(val root: String) {
     scan(spark, dirs, schema, s"table $table absent at snapshot $snap and no schema given")
   }
 
+  /** [[read]] against an already-parsed manifest: a caller that needs
+    * several tables and stats of one snapshot parses it once. */
+  def read(spark: SparkSession, m: Manifest, table: String,
+           schema: Option[StructType]): DataFrame =
+    scan(spark, m.tables.getOrElse(table, Seq.empty), schema,
+      s"table $table absent at snapshot ${m.id} and no schema given")
+
   /** Parquet scan over `dirs`, schema-bound when one is given. */
   private def scan(spark: SparkSession, dirs: Seq[String], schema: Option[StructType],
                    emptyError: => String): DataFrame = (dirs, schema) match {
@@ -217,14 +232,12 @@ class IceLite(val root: String) {
 
   /** Total (rows, bytes, files) for a table at a snapshot, from manifest
     * stats alone — the reference's index-size/status reads
-    * (`indexer/indexer_node.py:188-215`) with zero data I/O. Returns
-    * None when any dir predates stats recording; Some((0,0,0)) when the
-    * table simply has no data yet (matches read()'s empty DataFrame). */
+    * (`indexer/indexer_node.py:188-215`) with zero data I/O. Always
+    * `Some`: every manifest dir carries its stats, and a table with no
+    * data yet is (0, 0, 0) (matches read()'s empty DataFrame). */
   def tableStat(table: String, snapshotId: Option[Long] = None): Option[(Long, Long, Long)] = {
     val snap = snapshotId.orElse(currentSnapshotId)
-    val ds = snap.map(manifest(_).stats.getOrElse(table, Seq.empty)).getOrElse(Seq.empty)
-    if (ds.exists(_.rows < 0)) None
-    else Some((ds.map(_.rows).sum, ds.map(_.bytes).sum, ds.map(_.files.toLong).sum))
+    Some(snap.map(manifest(_).totals(table)).getOrElse((0L, 0L, 0L)))
   }
 
   /** Storage statistics over every table at a snapshot (A3/A7:

@@ -198,8 +198,8 @@ object Curation {
    * never the pid-hash re-shuffle a `Window.partitionBy(pid)` would
    * plan): per-partition token totals (one long per partition) are
    * prefix-summed on the driver and broadcast back, then a per-
-   * partition running sum assigns offsets — the same sort+two-pass
-   * shape the crawl pipeline uses for BFS seq assignment. Pack ids use
+   * partition running sum assigns offsets ([[runningOffset]], which the
+   * crawl pipeline's BFS seq assignment also uses). Pack ids use
    * integer `div`, exact at any corpus size (no double rounding).
    */
   /** The prefix-sum helpers project internal working columns next to the
@@ -226,34 +226,38 @@ object Curation {
   }
 
   /** Distributed exclusive prefix sum: reorders `df` (which must carry a
-    * long `n_tokens` column) by `sortExprs` and adds `start_tok` = sum of
-    * `n_tokens` over all preceding rows in that order. Two passes over
-    * ONE range-repartition shuffle, never a single-partition window:
-    * per-partition totals (one long each) are prefix-summed on the
-    * driver and broadcast back, then a per-partition running sum assigns
-    * offsets — the same sort+two-pass shape the crawl pipeline uses for
-    * BFS seq assignment. The eager localCheckpoint (not persist) feeds
-    * both rdd passes and is reclaimed by the ContextCleaner once callers
-    * drop the result. */
-  private[ops] def runningOffset(df: DataFrame, sortExprs: Seq[Column]): DataFrame = {
+    * long `n_tokens` column) by `sortExprs` and adds `start_tok` = `start`
+    * + sum of `n_tokens` over all preceding rows in that order. Two passes
+    * over ONE range-repartition shuffle, never a single-partition window:
+    * per-partition totals (one long each) are prefix-summed on the driver
+    * and broadcast back, then a per-partition running sum assigns offsets.
+    * With `n_tokens` = 1 and unique sort keys this is a dense global rank
+    * — the crawl's BFS seq and its seed numbering. The sorted rows are
+    * persisted by the first pass (the job that sums them), so the second
+    * reads them back without a job of its own; [[Checkpoints.release]] on
+    * the result frees them, and the ContextCleaner does once callers drop
+    * it. */
+  private[graft] def runningOffset(df: DataFrame, sortExprs: Seq[Column],
+                                   start: Long = 0L): DataFrame = {
     val spark = df.sparkSession
     val nParts = spark.sessionState.conf.numShufflePartitions
     val base = df
       .repartitionByRange(nParts, sortExprs: _*)
       .sortWithinPartitions(sortExprs: _*)
-      .localCheckpoint()
     val ti = base.schema.fieldIndex("n_tokens")
     // Both passes run at the InternalRow level (GraftBridge): the public
     // `.rdd` / `createDataFrame` pair would funnel every row through the
     // external-type converters (UTF8String->String and back, etc.) twice
     // — pure per-row overhead the running sum doesn't need. Rows are
-    // copied before wrapping because the source iterator may reuse its
+    // copied before caching because the source iterator may reuse its
     // UnsafeRow buffer.
     val internal = org.apache.spark.sql.GraftBridge.toInternalRdd(base)
+      .map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val partSums = internal.mapPartitionsWithIndex { (pid, it) =>
       var s = 0L; it.foreach(r => s += r.getLong(ti)); Iterator((pid, s))
     }.collect().toMap
-    val offsets = (0 until partSums.size).scanLeft(0L)((acc, p) => acc + partSums(p))
+    val offsets = (0 until partSums.size).scanLeft(start)((acc, p) => acc + partSums(p))
     val bcOff = spark.sparkContext.broadcast(offsets)
     val baseSchema = base.schema
     val nFields = baseSchema.length
@@ -261,8 +265,7 @@ object Curation {
     val schema = baseSchema.add("start_tok", org.apache.spark.sql.types.LongType)
     val out = internal.mapPartitionsWithIndex { (pid, it) =>
       var acc = bcOff.value(pid)
-      it.map { r0 =>
-        val r = r0.copy()
+      it.map { r =>
         val vals = new Array[Any](nFields + 1)
         var i = 0
         while (i < nFields) {

@@ -40,10 +40,6 @@ object Dedup {
         i => array_join(slice(toks, i, lit(n)), " ")))
       .otherwise(array())
 
-  /** Word n-gram shingles as an array column (empty if too few tokens). */
-  def shinglesCol(text: Column, n: Int): Column =
-    shinglesFromToks(TextAnalysis.tokensCol(text), n)
-
   /** (id, tokens-array) projection — materializes the token array once
     * so downstream array lambdas index into ArrayData instead of
     * re-tokenizing per access. */

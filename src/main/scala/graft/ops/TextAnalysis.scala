@@ -210,10 +210,11 @@ object TextAnalysis {
         val old = vocab
         vocab = vocab.withColumn("seq", regexp_replace(col("seq"), pat, rep))
           .localCheckpoint()
-        old.unpersist(blocking = false)
+        Checkpoints.release(old)
         i += 1
       }
     }
+    Checkpoints.release(vocab)
     merges.toSeq.toDF("merge_idx", "pair", "cnt")
   }
 

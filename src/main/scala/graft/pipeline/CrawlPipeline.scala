@@ -2,16 +2,15 @@ package graft.pipeline
 
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.codec.ImageCodec
 import graft.fetch.Fetcher
 import graft.icelite.IceLite
 import graft.model._
+import graft.ops.{Checkpoints, Curation}
 import graft.seen.UrlSeen
 import graft.urlnorm.UrlCanon
 import graft.urlnorm.urlfunctions._
@@ -90,7 +89,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // the raw strings and every per-URL cost (canonicalize, host parse,
     // dedup, row encode) runs executor-side — at N vs 4N cores a driver-
     // serial init is pure Amdahl overhead charged to both legs.
-    val (entriesDf: DataFrame, knownRows: Option[Long]) = if (seeds.size <= conf.initDistributedThreshold) {
+    val (entriesDf, nFrontier) = if (seeds.size <= conf.initDistributedThreshold) {
       val canon = seeds.map(UrlCanon.canonicalize).filter(UrlCanon.isHttpUrl)
       val firstSeen = scala.collection.mutable.LinkedHashSet[String]()
       canon.foreach(firstSeen += _)
@@ -99,8 +98,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       }
       // parallelize the seed write: a driver Seq becomes a single-task
       // local relation otherwise (a 10^7-seed bootstrap would serialize)
-      (spark.createDataset(entries).repartition(conf.nPartitions).toDF(),
-        Some(entries.size.toLong))
+      (spark.createDataset(entries).repartition(conf.nPartitions).toDF(), entries.size.toLong)
     } else {
       val raw = spark.sparkContext.parallelize(seeds, conf.nPartitions)
         .zipWithIndex() // positional: preserves seed-list order across partitions
@@ -109,32 +107,24 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
         .select(canonicalize_url($"raw").as("url"), $"idx")
         .filter(is_http_url($"url"))
         .groupBy($"url").agg(min($"idx").as("idx"))
-        .orderBy($"idx")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val schema = firstSeen.schema.add("seq", LongType)
-      val df = spark.createDataFrame(
-          firstSeen.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
-          schema)
+      // dense seq = 1 + rank in seed-list order; the rank's rows stay
+      // cached until the commit below has written them
+      val df = Curation.runningOffset(firstSeen.withColumn("n_tokens", lit(1L)),
+          Seq($"idx"), start = 1L)
         .select($"url", url_host($"url").as("host"), lit(0).as("depth"),
-          $"seq", lit("").as("parent"), lit(0).as("wave"))
+          $"start_tok".as("seq"), lit("").as("parent"), lit(0).as("wave"))
         .as[FrontierEntry].toDF()
-      val out = df.localCheckpoint() // materialize before unpersisting the sort
-      firstSeen.unpersist(blocking = false)
-      (out, None)
+      (df, df.count())
     }
     // `seeds` = canonicalized/deduplicated frontier rows (equal to the
     // frontier row count and max seq by construction — readers compare
     // them); `seeds_raw` = the caller's list size including junk/dupes.
-    // The distributed branch counts the localCheckpointed result: a
-    // cached-partition count, not a recompute.
-    val nFrontier = knownRows.getOrElse(entriesDf.count())
     val id = store.commit(
       Seq("frontier" -> entriesDf),
       Map("wave" -> "0", "seeds" -> nFrontier.toString,
         "seeds_raw" -> seeds.size.toString))
-    // drop any state cached before seeding
-    maxSeqCache = None; loggedCache = None; seenBloom = None
-    frontierState = None; flogKeysState = None
+    Checkpoints.release(entriesDf)
+    seenBloom = None // built from the new frontier by the first wave
     id
   }
 
@@ -145,9 +135,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
   def fetchlog(snap: Option[Long] = None): DataFrame =
     store.read(spark, "fetchlog", snap, Some(fetchlogSchema))
 
-  def pending(): DataFrame =
-    frontierDf.join(flogKeys, Seq("url"), "left_anti")
-
   // host -> (rules, crawl_delay, robots_failed), built and broadcast
   // once per pipeline; a hash probe per row (see [[graft.robots.HostRules]])
   private val robotsByHost: Column =
@@ -155,46 +142,32 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 
   // ---------- one wave ----------
 
-  // Driver-held wave-to-wave state (performance only — resume recomputes
-  // everything from the committed tables, so crashes can't corrupt it):
-  // frontier size == max seq (seq is dense), finalized-count, seen-Bloom.
-  // The frontier / finalized-key DataFrames are plain multi-dir parquet
-  // relations re-resolved from the manifest after each commit — a single
-  // scan node regardless of wave count (no union nesting, no block-
-  // manager residency, nothing to re-checkpoint on long crawls). Wave
-  // sizes are read from manifest footer stats, never count() jobs.
-  private var maxSeqCache: Option[Long] = None
-  private var loggedCache: Option[Long] = None
+  // The one piece of wave-to-wave driver state: the seen-set Bloom
+  // sketch, merged with each wave's new URLs instead of rebuilt from the
+  // frontier (performance only — a resumed pipeline builds it once from
+  // the committed frontier). Everything else a wave needs is re-read
+  // from the head manifest, parsed once at wave start: the frontier and
+  // fetchlog relations (plain multi-dir parquet scans, one scan node
+  // whatever the wave count) and their row counts (manifest stats, no
+  // Spark job).
   private var seenBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None
-  private var frontierState: Option[DataFrame] = None
-  private var flogKeysState: Option[DataFrame] = None
-
-  private def frontierDf: DataFrame = frontierState.getOrElse {
-    val df = store.read(spark, "frontier", None, Some(frontierSchema))
-    frontierState = Some(df); df
-  }
-  private def flogKeys: DataFrame = flogKeysState.getOrElse {
-    val df = fetchlog().select($"url")
-    flogKeysState = Some(df); df
-  }
 
   /** Runs wave `wave`; returns number of URLs fetched (0 = frontier drained). */
   def runWave(wave: Int): Long = {
-    val front0 = frontierDf
-    // dense seq ⇒ frontier size == max seq; manifest stats answer both
-    // totals with zero Spark jobs (fallback: one agg on resume from a
-    // pre-stats snapshot)
-    val maxSeq = maxSeqCache.getOrElse(
-      store.tableStat("frontier").map(_._1)
-        .getOrElse(front0.agg(max($"seq")).as[Long].head()))
-    maxSeqCache = Some(maxSeq)
-    val logged = loggedCache.getOrElse(
-      store.tableStat("fetchlog").map(_._1).getOrElse(flogKeys.count()))
-    loggedCache = Some(logged)
+    val head = store.currentSnapshotId match {
+      case Some(id) => store.manifest(id)
+      case None => return 0L // nothing committed, nothing to fetch
+    }
+    // dense seq ⇒ frontier size == max seq
+    val maxSeq = head.totals("frontier")._1
+    val logged = head.totals("fetchlog")._1
     if (logged >= maxSeq) return 0L // every enqueued URL is finalized
+    val front = store.read(spark, head, "frontier", Some(frontierSchema))
     // nothing finalized yet (wave 1 of a fresh crawl / a pre-seeded
     // drain) ⇒ pending == frontier; skip the anti-join shuffle entirely
-    val pend = if (logged == 0L) frontierDf else pending()
+    val pend = if (logged == 0L) front
+      else front.join(store.read(spark, head, "fetchlog", Some(fetchlogSchema)).select($"url"),
+        Seq("url"), "left_anti")
 
     // robots lookup (J3) + disallow predicate (F4); permissive default
     // when the host has no robots entry (`crawler/crawler_node.py:49-52`).
@@ -204,10 +177,10 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // as a column once so the lambda doesn't re-parse the URL per
     // prefix element.
     // Lazy checkpoint: the anti-join (frontier vs fetchlog) executes once
-    // and is reused by both the fetch path and the denied-audit path.
-    // With no robots rules at all, the lookup is the identity and `denied`
-    // empty by construction — skip the lookup AND the checkpoint
-    // materialization (100k+ rows through the block manager per wave).
+    // and is reused by both the fetch path and the denied-audit path; it
+    // is released when the wave ends. With no robots rules at all, the
+    // lookup is the identity and `denied` empty by construction — skip
+    // the lookup AND the checkpoint.
     val (allowed, deniedOpt) = if (robots.isEmpty) (pend, None) else {
       val joined = pend // all three null for a host without robots
         .withColumn("rules", robotsByHost("_1"))
@@ -358,58 +331,43 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // bucket-cogroup; nothing sketch-sized ever reaches the driver.
     val useBuckets = maxSeq > conf.seenBucketsThreshold
     val novel = if (useBuckets) {
-      UrlSeen.filterNewBucketed(candidates, front0.select($"url"), "url",
+      UrlSeen.filterNewBucketed(candidates, front.select($"url"), "url",
         conf.seenBuckets, itemsPerBucket = math.max(2L * maxSeq / conf.seenBuckets, 1024L))
     } else {
       val bloom = seenBloom.getOrElse(
-        UrlSeen.buildBloom(front0.select($"url"), "url", conf.bloomExpectedSeen))
+        UrlSeen.buildBloom(front.select($"url"), "url", conf.bloomExpectedSeen))
       seenBloom = Some(bloom)
       UrlSeen.filterNewWithBloom(spark, candidates,
-        front0.select($"url"), "url", bloom)
+        front.select($"url"), "url", bloom)
     }
 
-    // global BFS seq assignment: rank by (parent_depth, parent_seq, pos) —
-    // distributed via sort + zipWithIndex (no single-partition window at
-    // 10^8 discoveries/wave). `novel` is persisted FIRST: a global sort
-    // range-samples its input before shuffling, so an unpersisted plan
-    // would evaluate the whole discover subtree (link explode + first-
-    // seen agg + seen-filter) twice. The sorted result is persisted too,
-    // for the two passes zipWithIndex inherently needs (offset count +
-    // map); it then goes straight to a staged parquet dir — row count
-    // from footers, later consumers (commit reference, bloom merge)
-    // read the file. No checkpoint or count jobs anywhere.
+    // global BFS seq assignment: seq = maxSeq + 1 + rank by (parent_depth,
+    // parent_seq, pos), through the shared two-pass range-shuffle rank
+    // (Curation.runningOffset; no single-partition window at 10^8
+    // discoveries/wave). `novel` is persisted first: the range shuffle
+    // samples its input, so an unpersisted plan would evaluate the whole
+    // discover subtree twice. Empty-wave short-circuit: a tail wave
+    // discovers nothing — isEmpty on the persisted set is one cheap job,
+    // versus the rank and stage write it skips.
     val novelP = novel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Empty-wave short-circuit: a draining frontier (and the final wave
-    // of every crawl) discovers nothing new — isEmpty on the persisted
-    // novel set is one cheap job, versus the range-sample + sort +
-    // zipWithIndex + stage-write + footer-read chain it skips.
     val stagedFrontierDirOpt: Option[String] = if (novelP.isEmpty) None else {
-      val sortedNovel = novelP.orderBy($"parent_depth", $"parent_seq", $"pos")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val novelSchema = sortedNovel.schema
-        .add("seq", LongType).add("wave", org.apache.spark.sql.types.IntegerType)
-      val wv0 = wave
-      // Recover the parent URL by joining the winners back to this
-      // wave's fetched pages on parent_seq (unique). The fetched side is
-      // a column-pruned parquet read ((seq, url) only); at bench scale
-      // it broadcasts, at 10^7-page waves it flips to a shuffle join —
-      // either is far cheaper than shuffling the parent string through
-      // the 20×-larger exploded-link aggregation above.
-      val parents = fetched.select($"seq".as("parent_seq"), $"url".as("parent"))
-      val newEntries = spark.createDataFrame(
-          sortedNovel.rdd.zipWithIndex.map { case (r, i) =>
-            Row.fromSeq(r.toSeq :+ (maxSeq + i + 1) :+ wv0) },
-          novelSchema)
-        .join(parents, Seq("parent_seq"))
-        .select($"url", url_host($"url").as("host"), $"depth".cast("int").as("depth"),
-          $"seq", $"parent", $"wave")
+      val ranked = Curation.runningOffset(novelP.withColumn("n_tokens", lit(1L)),
+        Seq($"parent_depth", $"parent_seq", $"pos"), start = maxSeq + 1)
+      // the parent URL and the wave come from joining the winners back to
+      // this wave's fetched pages on parent_seq (unique; every winner's
+      // parent is one of them): a column-pruned parquet read, far cheaper
+      // than carrying the parent string through the 20×-larger link
+      // aggregation above, and the wave never enters the plan as a literal
+      val parents = fetched.select($"seq".as("parent_seq"), $"url".as("parent"), $"wave")
+      val newEntries = ranked.join(parents, Seq("parent_seq"))
+        .select($"url", url_host($"url").as("host"), $"depth", $"start_tok".as("seq"),
+          $"parent", $"wave")
         .as[FrontierEntry]
       val dir = store.stage("frontier", newEntries.toDF())
-      sortedNovel.unpersist(blocking = false)
+      Checkpoints.release(newEntries)
       Some(dir)
     }
     novelP.unpersist(blocking = false)
-    CrawlPipeline.releaseCheckpoint(candidates)
     val nNew = stagedFrontierDirOpt
       .map(d => graft.icelite.ParquetStats.dirStat(d).rows).getOrElse(0L)
 
@@ -487,10 +445,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 
     val staged = Seq.newBuilder[(String, String)]
     if (nFetched > 0) staged += "images" -> stagedImagesDir
-    stagedFrontierDirOpt.foreach { dir =>
-      if (nNew > 0) staged += "frontier" -> dir
-      else org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    stagedFrontierDirOpt.foreach(staged += "frontier" -> _)
     val deltas = Seq.newBuilder[(String, DataFrame)]
     deltas += "fetchlog" -> flog
     if (nFetched > 0) {
@@ -498,38 +453,20 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       deltas += "metrics" -> metrics
       deltas += "lineage" -> lineage
     }
-    val snapId = store.commit(deltas.result(),
+    store.commit(deltas.result(),
       Map("wave" -> wave.toString, "fetched" -> nFetched.toString, "new_urls" -> nNew.toString),
       staged = staged.result())
     // an all-denied wave stages an empty images dir that no manifest
     // references (it is excluded from `staged` above) — remove it after
-    // the commit's fetchlog write has re-read it, mirroring the staged
-    // frontier cleanup
+    // the commit's fetchlog write has re-read it
     if (nFetched == 0)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedImagesDir))
+    // every checkpoint the wave made is an RDD leaf of one of these plans:
+    // the robots-joined pending set (flog's denied branch), `candidates`,
+    // the bucketed seen-filter's classified set (novel), `perPart`
+    Checkpoints.release(flog, candidates, novel, perPart)
 
-    // advance driver caches to the committed state: counts come from the
-    // manifest footer stats of the just-committed delta dirs; the state
-    // DataFrames re-resolve against the new manifest (single multi-dir
-    // parquet relation — zero jobs here)
-    maxSeqCache = Some(maxSeq + nNew)
-    loggedCache = Some(store.tableStat("fetchlog", Some(snapId)).map(_._1)
-      .getOrElse {
-        // resume-from-pre-stats store: legacy dirs without footer stats
-        // poison the table total, but the delta THIS commit wrote
-        // (d<snapId>) always has stats — its exact row count is
-        // nFetched + nDenied, keeping the drained check
-        // (logged >= maxSeq) exact even with robots denials
-        val sep = java.io.File.separator
-        val deltaRows = store.manifest(snapId).stats
-          .getOrElse("fetchlog", Seq.empty)
-          .filter(_.dir.endsWith(s"${sep}d$snapId"))
-          .map(_.rows).filter(_ >= 0).sum
-        logged + (if (deltaRows > 0) deltaRows else nFetched)
-      })
-    frontierState = None
-    flogKeysState = None
-    if (nNew > 0 && !useBuckets)
+    if (!useBuckets)
       stagedFrontierDirOpt.foreach(dir =>
         seenBloom.foreach(_.mergeInPlace(UrlSeen.buildBloom(
           spark.read.schema(frontierSchema).parquet(dir), "url", conf.bloomExpectedSeen))))
@@ -552,8 +489,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
         if (conf.compactEveryWaves > 0 && wave % conf.compactEveryWaves == 0) {
           Seq("frontier", "fetchlog", "metrics", "lineage")
             .foreach(t => store.compact(spark, t))
-          frontierState = None // re-resolve against the compacted manifest
-          flogKeysState = None
         }
         wave += 1
       }
@@ -563,14 +498,6 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
 }
 
 object CrawlPipeline {
-  /** Frees the blocks of an eager `localCheckpoint()`. `unpersist` on the
-    * checkpointed Dataset does not: it only drops cache-manager entries,
-    * and the blocks belong to the RDD under its `LogicalRDD`. */
-  private def releaseCheckpoint(ds: Dataset[_]): Unit = ds.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
-  }
-
   /** Deterministic crawl clock origin (2025-01-01T00:00:00Z): indexed
     * docs stamp `crawl_date` = epoch + wave seconds, keeping resume
     * re-runs byte-identical where the reference's `time.strftime`

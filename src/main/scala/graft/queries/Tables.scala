@@ -10,7 +10,6 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame  = t(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame  = t(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = t(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")

@@ -4,11 +4,10 @@ import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
 /**
@@ -54,13 +53,6 @@ object UrlSeen {
   /** xxhash64(urlCol) — the key both sketch builders and probes use. */
   private def keyCol(urlCol: String): Column = xxhash64(col(urlCol))
 
-  /** Scala-side xxhash64 identical to the SQL expression (seed 42).
-    * Test/driver-side helper only — row-at-a-time paths compute the
-    * hash as a native codegen column instead (classifyBucketed). */
-  private[seen] def xx64(s: String): Long =
-    XxHash64(Seq(Literal(UTF8String.fromString(s))), 42L)
-      .eval(null).asInstanceOf[Long]
-
   /** Native codegen probe: might_contain(<sketch literal>, xxhash64(url)). */
   private def mightContainCol(sketch: Array[Byte], urlCol: String): Column =
     GraftBridge.column(BloomFilterMightContain(
@@ -72,18 +64,11 @@ object UrlSeen {
     seen.select(keyCol(urlCol).as("h")).stat
       .bloomFilter("h", math.max(expectedItems, 1L), fpp)
 
-  /**
-   * Returns candidates whose `urlCol` is definitely absent from `seen`.
-   * Candidates must already be intra-batch deduplicated.
-   */
-  def filterNew(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                urlCol: String, expectedSeen: Long): DataFrame =
-    filterNewWithBloom(spark, candidates, seen, urlCol,
-      buildBloom(seen, urlCol, expectedSeen))
-
-  /** Same, with a caller-maintained sketch (the pipeline merges each
-    * wave's new URLs into a driver-held Bloom instead of rebuilding
-    * from the full frontier every wave). */
+  /** Returns candidates whose `urlCol` is definitely absent from `seen`,
+    * pre-filtered through a caller-maintained sketch (the pipeline merges
+    * each wave's new URLs into a driver-held Bloom instead of rebuilding
+    * from the full frontier every wave). Candidates must already be
+    * intra-batch deduplicated. */
   def filterNewWithBloom(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
                          urlCol: String, bloom: BloomFilter): DataFrame = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -161,10 +146,9 @@ object UrlSeen {
     val sketches = bucketSketches(seen, urlCol, nBuckets, itemsPerBucket, fpp)
     // eager localCheckpoint, not persist: the two consumers below (split
     // + anti-join) must not recompute the cogroup, and an RDD-level
-    // checkpoint is reclaimed by the ContextCleaner once the wave's
-    // plans drop their references — an explicit persist would pin one
-    // cached table per wave in the cache manager for the session
-    // lifetime on exactly the long-crawl path this function exists for
+    // checkpoint is an RDD leaf of the result's plan, which the caller
+    // frees with Checkpoints.release once the result has run — a cached
+    // table would stay in the cache manager until explicitly uncached
     val classified = classifyBucketed(candidates, sketches, urlCol, nBuckets)
       .localCheckpoint()
     val definitelyNew = classified.filter(!col("might_be_seen")).drop("might_be_seen")

@@ -231,11 +231,9 @@ class CrawlParitySpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
-  test("job budget: a politeness-bound tail wave that discovers and denies nothing runs <= 14 jobs") {
-    // a tail wave (no discoveries, no denials) runs only the wave's fixed
-    // path — pending anti-join, politeness rank, salted fetch + images
-    // stage, discover and seen-filter, the commit's writes — so a change
-    // that adds a Spark job to every wave shows here
+  // the suite's crawl run wave by wave, with each wave's Spark job count:
+  // (wave, pages fetched, jobs, URLs discovered, any robots denial)
+  private lazy val jobsPerWave: Vector[(Int, Long, Int, Long, Boolean)] = {
     val root = Files.createTempDirectory("crawlJ").toString
     val p = newPipeline(root)
     p.init(web.seeds)
@@ -247,12 +245,59 @@ class CrawlParitySpec extends AnyFunSuite {
     val st = new IceLite(root)
     val denied = st.read(spark, "fetchlog").filter($"status" === -1)
       .select($"wave").as[Int].collect().toSet
-    val noNew = st.history.map(st.commitMeta).filter(_.get("new_urls").contains("0"))
-      .flatMap(_.get("wave").map(_.toInt)).toSet
-    val tail = perWave.filter { case (w, _, _) => noNew(w) && !denied(w) }
-    assert(tail.nonEmpty, s"no tail wave in $perWave")
-    tail.foreach { case (w, n, jobs) =>
-      assert(jobs <= 14, s"tail wave $w ($n pages) ran $jobs Spark jobs; all waves: $perWave")
+    val newUrls = st.history.map(st.commitMeta)
+      .flatMap(m => m.get("new_urls").map(m("wave").toInt -> _.toLong)).toMap
+    perWave.map { case (w, n, jobs) => (w, n, jobs, newUrls(w), denied(w)) }
+  }
+
+  test("job budget: a politeness-bound tail wave that discovers and denies nothing runs <= 14 jobs") {
+    // a tail wave (no discoveries, no denials) runs only the wave's fixed
+    // path — pending anti-join, politeness rank, salted fetch + images
+    // stage, discover and seen-filter, the commit's writes — so a change
+    // that adds a Spark job to every wave shows here
+    val tail = jobsPerWave.filter { case (_, _, _, nNew, denied) => nNew == 0 && !denied }
+    assert(tail.nonEmpty, s"no tail wave in $jobsPerWave")
+    tail.foreach { case (w, n, jobs, _, _) =>
+      assert(jobs <= 14, s"tail wave $w ($n pages) ran $jobs Spark jobs; all waves: $jobsPerWave")
+    }
+  }
+
+  test("job budget: a discovering wave runs <= 22 jobs") {
+    // the tail wave's path plus the seq assignment: isEmpty on the novel
+    // set, the rank's range sample, shuffle and partition-sum pass, the
+    // parents broadcast and the staged frontier write. The first wave
+    // also builds the seen-set sketch from the frontier: one job more.
+    val discovering = jobsPerWave.filter(_._4 > 0)
+    assert(discovering.size > 1, s"no discovering wave after the first in $jobsPerWave")
+    discovering.foreach { case (w, n, jobs, nNew, _) =>
+      val budget = if (w == 1) 23 else 22
+      assert(jobs <= budget, s"wave $w ($n pages, $nNew new) ran $jobs Spark jobs; all waves: $jobsPerWave")
+    }
+  }
+
+  test("no RDD persisted by init or a wave outlives the call") {
+    // distributed init (the seed rank), then discovering waves with robots
+    // rules (the robots-joined pending set, candidates, the seq rank,
+    // perPart), through both seen-filter paths (the bucketed one adds its
+    // classified checkpoint)
+    val sc = spark.sparkContext
+    def leftBy(body: => Unit): Set[String] = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      (sc.getPersistentRDDs -- before).values.map(_.toString).toSet
+    }
+    for (c <- Seq(conf, conf.copy(seenBucketsThreshold = 0L, seenBuckets = 16))) {
+      val root = Files.createTempDirectory("crawlM").toString
+      val p = newPipeline(root, c.copy(initDistributedThreshold = 0))
+      val afterInit = leftBy(p.init(web.seeds))
+      assert(afterInit.isEmpty, s"init left $afterInit")
+      (1 to 3).foreach { w =>
+        val left = leftBy(p.runWave(w))
+        assert(left.isEmpty, s"wave $w left $left")
+      }
+      val st = new IceLite(root)
+      assert(st.history.map(st.commitMeta).exists(_.get("new_urls").exists(_ != "0")),
+        "no wave discovered anything")
     }
   }
 

@@ -29,6 +29,27 @@ class IceLiteSpec extends AnyFunSuite {
     assert(store.history == Seq(s2, s1))
   }
 
+  test("a manifest line of unknown shape fails read and tableStat, naming the file") {
+    val root = Files.createTempDirectory("icelite").toString
+    val store = new IceLite(root)
+    val id = store.commit(Seq(
+      "a" -> Seq((1L, "x")).toDF("id", "v"),
+      "b" -> Seq((2L, "y")).toDF("id", "v")))
+    // a `table` line without its stats: skipping it would make b's rows
+    // vanish from every read
+    val path = java.nio.file.Paths.get(root, "meta", s"snap-$id.manifest")
+    val lines = Files.readAllLines(path)
+    val bLine = (0 until lines.size).find(i => lines.get(i).startsWith("table\tb\t")).get
+    lines.set(bLine, lines.get(bLine).split("\t").take(3).mkString("\t"))
+    Files.write(path, lines)
+    for ((what, call) <- Seq[(String, () => Any)](
+        "read" -> (() => store.read(spark, "a")),
+        "tableStat" -> (() => store.tableStat("b")))) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(path.toString), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("uncommitted data dirs are invisible (crash mid-commit)") {
     val root = Files.createTempDirectory("icelite").toString
     val store = new IceLite(root)
