@@ -35,9 +35,9 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
  *    non-null column is REQUIRED in the file, with no definition
  *    levels); readers see every file column as nullable either way.
  *  - **files**: a task writes its partition to a hidden
- *    `_part-<pid>-<uuid>.parquet` (invisible to readers and to
- *    [[ParquetStats]]) and reports it; a partition with no rows opens
- *    nothing. After the job the driver renames each reported file to
+ *    `_part-<pid>-<uuid>.parquet` (invisible to readers) and reports
+ *    it; a partition with no rows opens nothing. After the job the
+ *    driver renames each reported file to
  *    `part-<pid>-<uuid>.parquet` and deletes every other file in the dir
  *    (a failed or duplicate attempt's output), so the visible files are
  *    exactly the ones the stats describe. Only the driver makes a file
@@ -50,7 +50,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
 private[icelite] object DeltaWriter {
 
   /** Overwrites `dir` with the rows of `df`; returns the dir's stats. */
-  def write(df: DataFrame, dir: String): ParquetStats.DirStat = {
+  def write(df: DataFrame, dir: String): IceLite.DirStat = {
     val qe = df.queryExecution
     val session = qe.sparkSession
     val sqlConf = session.sessionState.conf
@@ -106,7 +106,7 @@ private[icelite] object DeltaWriter {
       val owner = if (n.startsWith(".") && n.endsWith(".crc")) n.drop(1).dropRight(4) else n
       if (!reported(owner)) org.apache.commons.io.FileUtils.forceDelete(f)
     }
-    ParquetStats.DirStat(dir, files.map(_._2).sum, files.map(_._3).sum, files.size)
+    IceLite.DirStat(dir, files.map(_._2).sum, files.map(_._3).sum, files.size)
   }
 
   /** Writes the hidden parquet file `_name` under `dirUri` through

@@ -36,10 +36,11 @@ import org.apache.spark.sql.types.StructType
  * partition to a hidden `_part-…` file and reports (file, rows, bytes)
  * to the driver, which renames the reported files to `part-…` and
  * deletes the rest. There is no `_SUCCESS` marker and no `_temporary`
- * dir — the manifest swap is the commit. The manifest's stats for the
- * dirs a commit or compaction writes are the writer's reported counts,
- * not a re-read of the footers; a staged dir's are read from its footers
- * when it is committed.
+ * dir — the manifest swap is the commit. Every stat in a manifest is
+ * the writer's report, never a re-read of the files: a commit or
+ * compaction records the counts of the dirs it writes, and [[stage]]
+ * keeps its dir's counts until the commit that publishes the dir (or
+ * [[discard]]) takes them.
  *
  * Tables are append-only (deltas union at read); the crawl pipeline's
  * tables are all logs (frontier, fetchlog, images, metrics, lineage),
@@ -52,7 +53,7 @@ class IceLite(val root: String) {
 
   case class Manifest(id: Long, parent: Long, meta: Map[String, String],
                       tables: Map[String, Seq[String]],
-                      stats: Map[String, Seq[ParquetStats.DirStat]]) {
+                      stats: Map[String, Seq[IceLite.DirStat]]) {
     /** (rows, bytes, files) summed over `table`'s dirs; (0, 0, 0) for a
       * table with no data at this snapshot. */
     def totals(table: String): (Long, Long, Long) = {
@@ -77,8 +78,8 @@ class IceLite(val root: String) {
     var parent = -1L
     val meta = scala.collection.mutable.Map[String, String]()
     val tables = scala.collection.mutable.Map[String, Vector[String]]()
-    val stats = scala.collection.mutable.Map[String, Vector[ParquetStats.DirStat]]()
-    def add(name: String, dir: String, st: ParquetStats.DirStat): Unit = {
+    val stats = scala.collection.mutable.Map[String, Vector[IceLite.DirStat]]()
+    def add(name: String, dir: String, st: IceLite.DirStat): Unit = {
       tables(name) = tables.getOrElse(name, Vector.empty) :+ dir
       stats(name) = stats.getOrElse(name, Vector.empty) :+ st
     }
@@ -88,12 +89,16 @@ class IceLite(val root: String) {
         case "meta" :: k :: v :: Nil     => meta(k) = v
         // table <name> <dir> <rows> <bytes> <files>
         case "table" :: name :: dir :: rows :: bytes :: files :: Nil =>
-          add(name, dir, ParquetStats.DirStat(dir, rows.toLong, bytes.toLong, files.toInt))
+          add(name, dir, IceLite.DirStat(dir, rows.toLong, bytes.toLong, files.toInt))
         case _ => throw new IllegalStateException(s"$path: unrecognised manifest line: $l")
       }
     }
     Manifest(id, parent, meta.toMap, tables.toMap, stats.toMap)
   }
+
+  // the writer's stats of each dir [[stage]] wrote, until the commit that
+  // publishes it (or [[discard]]) takes them
+  private val stagedStats = scala.collection.concurrent.TrieMap.empty[String, IceLite.DirStat]
 
   /** Pre-write a delta outside any snapshot (invisible until a commit
     * references the returned dir). Lets a pipeline materialize one
@@ -102,19 +107,32 @@ class IceLite(val root: String) {
   def stage(table: String, df: DataFrame): String = {
     val dir = Paths.get(root, table,
       s"s${java.util.UUID.randomUUID().toString.take(12)}").toString
-    DeltaWriter.write(df, dir)
+    stagedStats(dir) = DeltaWriter.write(df, dir)
     dir
   }
 
+  /** The writer's stats for `dir`, which [[stage]] wrote and no commit or
+    * [[discard]] has taken yet. */
+  def stagedStat(dir: String): IceLite.DirStat = stagedStats.getOrElse(dir,
+    throw new IllegalArgumentException(s"$dir: not staged by this store, or already committed or discarded"))
+
+  /** Drop a staged dir that no commit will publish: its stats and its files. */
+  def discard(dir: String): Unit = {
+    stagedStats -= dir
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   /** Atomically commit deltas for several tables as one snapshot.
-    * `staged` entries are dirs previously written via [[stage]]. */
+    * `staged` entries are dirs previously written via [[stage]]; any
+    * other dir fails the commit before anything is written. */
   def commit(deltas: Seq[(String, DataFrame)], meta: Map[String, String] = Map.empty,
              staged: Seq[(String, String)] = Seq.empty): Long = {
+    val stagedDirs = staged.map { case (t, dir) => t -> stagedStat(dir) }
     Files.createDirectories(metaDir)
     val parent = currentSnapshotId
     val id = parent.getOrElse(0L) + 1L
     // carry forward prior dirs WITH their recorded stats (no re-scan)
-    val prev: Map[String, Seq[ParquetStats.DirStat]] =
+    val prev: Map[String, Seq[IceLite.DirStat]] =
       parent.map(p => manifest(p).stats).getOrElse(Map.empty)
 
     // Write all table deltas concurrently (independent Spark jobs from
@@ -128,19 +146,18 @@ class IceLite(val root: String) {
         Future(table -> DeltaWriter.write(df, Paths.get(root, table, s"d$id").toString))
       }, Duration.Inf)
     }
-    // the writer's counts for the dirs written here; footer stats for the
-    // staged dirs (driver-side metadata read, no job)
-    val stagedDirs = staged.map { case (t, dir) => t -> ParquetStats.dirStat(dir) }
     val merged = (newDirs ++ stagedDirs).foldLeft(prev) { case (acc, (t, st)) =>
       acc + (t -> (acc.getOrElse(t, Seq.empty) :+ st))
     }
 
     publish(id, parent, meta, merged)
+    stagedStats --= staged.map(_._2)
+    id
   }
 
   /** Write manifest `id` and atomically swap `_head` to it. */
   private def publish(id: Long, parent: Option[Long], meta: Map[String, String],
-                      merged: Map[String, Seq[ParquetStats.DirStat]]): Long = {
+                      merged: Map[String, Seq[IceLite.DirStat]]): Long = {
     val sb = new StringBuilder
     sb.append(s"parent\t${parent.getOrElse(-1L)}\n")
     meta.foreach { case (k, v) =>
@@ -330,4 +347,9 @@ class IceLite(val root: String) {
     drop.foreach(id => Files.deleteIfExists(manifestPath(id)))
     (drop, deletable)
   }
+}
+
+object IceLite {
+  /** A data dir's (rows, bytes, files), as [[DeltaWriter]] reports them. */
+  case class DirStat(dir: String, rows: Long, bytes: Long, files: Int)
 }

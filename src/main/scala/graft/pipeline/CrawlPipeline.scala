@@ -12,7 +12,6 @@ import graft.icelite.IceLite
 import graft.model._
 import graft.ops.{Checkpoints, Curation}
 import graft.seen.UrlSeen
-import graft.urlnorm.UrlCanon
 import graft.urlnorm.urlfunctions._
 
 /** Tuning knobs for the wave loop. */
@@ -28,9 +27,6 @@ case class CrawlConfig(
     // cannot ship a single 12 GB sketch to every task
     seenBucketsThreshold: Long = 100000000L,
     seenBuckets: Int = 4096,
-    // seed lists longer than this bootstrap distributively (driver ships
-    // raw strings only); below it a one-job driver-side path is cheaper
-    initDistributedThreshold: Int = 16384,
     // compact the log tables' wave-per-delta dirs every k waves (0 = off):
     // a politeness-bound crawl accretes one small dir per table per wave,
     // and past ~10^3 waves scan planning outgrows the data (IceLite.compact)
@@ -83,46 +79,27 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     * snapshot 1 (reference: seeds enqueued in list order,
     * `archive/master_node.py:39-42`). */
   def init(seeds: Seq[String]): Long = {
-    // Two shapes, same semantics (canonicalize -> first-seen-wins in list
-    // order -> dense seq). Small lists stay driver-side (one job); large
-    // bootstraps (10^5..10^7 seeds) go distributed: the driver ships only
-    // the raw strings and every per-URL cost (canonicalize, host parse,
-    // dedup, row encode) runs executor-side — at N vs 4N cores a driver-
-    // serial init is pure Amdahl overhead charged to both legs.
-    val (entriesDf, nFrontier) = if (seeds.size <= conf.initDistributedThreshold) {
-      val canon = seeds.map(UrlCanon.canonicalize).filter(UrlCanon.isHttpUrl)
-      val firstSeen = scala.collection.mutable.LinkedHashSet[String]()
-      canon.foreach(firstSeen += _)
-      val entries = firstSeen.toSeq.zipWithIndex.map { case (u, i) =>
-        FrontierEntry(u, UrlCanon.host(u), depth = 0, seq = i + 1L, parent = "", wave = 0)
-      }
-      // parallelize the seed write: a driver Seq becomes a single-task
-      // local relation otherwise (a 10^7-seed bootstrap would serialize)
-      (spark.createDataset(entries).repartition(conf.nPartitions).toDF(), entries.size.toLong)
-    } else {
-      val raw = spark.sparkContext.parallelize(seeds, conf.nPartitions)
-        .zipWithIndex() // positional: preserves seed-list order across partitions
-        .toDF("raw", "idx")
-      val firstSeen = raw
-        .select(canonicalize_url($"raw").as("url"), $"idx")
-        .filter(is_http_url($"url"))
-        .groupBy($"url").agg(min($"idx").as("idx"))
-      // dense seq = 1 + rank in seed-list order; the rank's rows stay
-      // cached until the commit below has written them
-      val df = Curation.runningOffset(firstSeen.withColumn("n_tokens", lit(1L)),
-          Seq($"idx"), start = 1L)
-        .select($"url", url_host($"url").as("host"), lit(0).as("depth"),
-          $"start_tok".as("seq"), lit("").as("parent"), lit(0).as("wave"))
-        .as[FrontierEntry].toDF()
-      (df, df.count())
-    }
-    // `seeds` = canonicalized/deduplicated frontier rows (equal to the
-    // frontier row count and max seq by construction — readers compare
-    // them); `seeds_raw` = the caller's list size including junk/dupes.
-    val id = store.commit(
-      Seq("frontier" -> entriesDf),
-      Map("wave" -> "0", "seeds" -> nFrontier.toString,
-        "seeds_raw" -> seeds.size.toString))
+    // canonicalize -> first-seen-wins in list order -> dense seq, all
+    // executor-side: the driver ships only the raw strings, so a 10^7-seed
+    // bootstrap costs no driver-serial per-URL work
+    val raw = spark.sparkContext.parallelize(seeds, conf.nPartitions)
+      .zipWithIndex() // positional: preserves seed-list order across partitions
+      .toDF("raw", "idx")
+    val firstSeen = raw
+      .select(canonicalize_url($"raw").as("url"), $"idx")
+      .filter(is_http_url($"url"))
+      .groupBy($"url").agg(min($"idx").as("idx"))
+    // dense seq = 1 + rank in seed-list order; the rank's rows stay
+    // cached until the commit below has written them
+    val entriesDf = Curation.runningOffset(firstSeen.withColumn("n_tokens", lit(1L)),
+        Seq($"idx"), start = 1L)
+      .select($"url", url_host($"url").as("host"), lit(0).as("depth"),
+        $"start_tok".as("seq"), lit("").as("parent"), lit(0).as("wave"))
+      .as[FrontierEntry].toDF()
+    // `seeds_raw` = the caller's list size including junk/dupes; the
+    // deduplicated count is the frontier's manifest row count
+    val id = store.commit(Seq("frontier" -> entriesDf),
+      Map("wave" -> "0", "seeds_raw" -> seeds.size.toString))
     Checkpoints.release(entriesDf)
     seenBloom = None // built from the new frontier by the first wave
     id
@@ -285,7 +262,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
     // The re-read is bound to the written schema: inferring it from the
     // footers would cost a Spark job per wave.
     val stagedImagesDir = store.stage("images", fetchedRaw.toDF())
-    val nFetched = graft.icelite.ParquetStats.dirStat(stagedImagesDir).rows // footer metadata, no job
+    val nFetched = store.stagedStat(stagedImagesDir).rows // the writer's count, no job
     val fetched = spark.read.schema(fetchedRaw.schema).parquet(stagedImagesDir)
 
     // discoveries: explode links in document order (F10), resolve (F3),
@@ -368,8 +345,7 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       Some(dir)
     }
     novelP.unpersist(blocking = false)
-    val nNew = stagedFrontierDirOpt
-      .map(d => graft.icelite.ParquetStats.dirStat(d).rows).getOrElse(0L)
+    val nNew = stagedFrontierDirOpt.map(store.stagedStat(_).rows).getOrElse(0L)
 
     // fetchlog Δ: wave results + robots-denied finalizations (F12 routing).
     // NOTE: the wave number deliberately never appears as a literal in any
@@ -457,10 +433,9 @@ class CrawlPipeline(spark: SparkSession, store: IceLite,
       Map("wave" -> wave.toString, "fetched" -> nFetched.toString, "new_urls" -> nNew.toString),
       staged = staged.result())
     // an all-denied wave stages an empty images dir that no manifest
-    // references (it is excluded from `staged` above) — remove it after
+    // references (it is excluded from `staged` above) — discard it after
     // the commit's fetchlog write has re-read it
-    if (nFetched == 0)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedImagesDir))
+    if (nFetched == 0) store.discard(stagedImagesDir)
     // every checkpoint the wave made is an RDD leaf of one of these plans:
     // the robots-joined pending set (flog's denied branch), `candidates`,
     // the bucketed seen-filter's classified set (novel), `perPart`

@@ -276,7 +276,7 @@ class CrawlParitySpec extends AnyFunSuite {
   }
 
   test("no RDD persisted by init or a wave outlives the call") {
-    // distributed init (the seed rank), then discovering waves with robots
+    // init (the seed rank), then discovering waves with robots
     // rules (the robots-joined pending set, candidates, the seq rank,
     // perPart), through both seen-filter paths (the bucketed one adds its
     // classified checkpoint)
@@ -288,7 +288,7 @@ class CrawlParitySpec extends AnyFunSuite {
     }
     for (c <- Seq(conf, conf.copy(seenBucketsThreshold = 0L, seenBuckets = 16))) {
       val root = Files.createTempDirectory("crawlM").toString
-      val p = newPipeline(root, c.copy(initDistributedThreshold = 0))
+      val p = newPipeline(root, c)
       val afterInit = leftBy(p.init(web.seeds))
       assert(afterInit.isEmpty, s"init left $afterInit")
       (1 to 3).foreach { w =>
@@ -456,24 +456,32 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(got == wantF, "failed-robots crawl must stay oracle-exact")
   }
 
-  test("distributed init == driver init: canonicalize + first-seen order + dense seq") {
+  test("init == sequential reference: canonicalize + first-seen order + dense seq") {
     // messy bootstrap list: duplicates-after-canonicalization, fragments,
-    // junk schemes, whitespace — the exact driver-path semantics must
-    // survive the distributed (large-seed-list) bootstrap
+    // junk schemes, whitespace
     val messy = web.seeds.flatMap(s => Seq(s, s + "#frag", s.toUpperCase.replace("HTTP", "http"))) ++
       Seq("ftp://nope.example.test/x", "   ", "http://h0.example.test/p/0")
-    def initAs(c: CrawlConfig): Vector[(String, Long)] = {
-      val root = Files.createTempDirectory("crawlI").toString
-      val p = newPipeline(root, c)
-      p.init(messy)
-      new IceLite(root).read(spark, "frontier")
-        .orderBy($"seq").select($"url", $"seq").as[(String, Long)].collect().toVector
-    }
-    val driverSide = initAs(conf) // messy.size < default threshold
-    val distributed = initAs(conf.copy(initDistributedThreshold = 0))
-    assert(driverSide.nonEmpty && driverSide.map(_._2) == (1L to driverSide.size).toVector)
-    assert(distributed == driverSide,
-      s"first diff: ${distributed.zip(driverSide).find(t => t._1 != t._2)}")
+    val root = Files.createTempDirectory("crawlI").toString
+    newPipeline(root).init(messy)
+    val got = new IceLite(root).read(spark, "frontier")
+      .orderBy($"seq").select($"url", $"seq").as[(String, Long)].collect().toVector
+    // the reference: canonicalize in list order, keep each URL's first
+    // occurrence, number from 1
+    val firstSeen = scala.collection.mutable.LinkedHashSet[String]()
+    messy.map(UrlCanon.canonicalize).filter(UrlCanon.isHttpUrl).foreach(firstSeen += _)
+    val want = firstSeen.toVector.zipWithIndex.map { case (u, i) => (u, i + 1L) }
+    assert(want.nonEmpty && want.size < messy.size) // the list has duplicates
+    assert(got == want, s"first diff: ${got.zip(want).find(t => t._1 != t._2)}")
+  }
+
+  test("every manifest stat of a robots crawl equals a scan and the file listing") {
+    // the suite's crawl: robots rules, discovering waves; its staged dirs
+    // (images every wave, frontier on discovering waves) carry the
+    // writer's stats like the dirs each commit writes
+    val m = store.manifest(store.currentSnapshotId.get)
+    val staged = (t: String) => m.tables(t).count(d => new java.io.File(d).getName.startsWith("s"))
+    assert(staged("images") > 1 && staged("frontier") > 1, m.tables)
+    m.stats.values.flatten.foreach(st => assert(st == SparkTestBase.dirStatReference(st.dir)))
   }
 
   test("v1 FIFO/BFS parity: with unconstrained politeness, seq order == FIFO order") {

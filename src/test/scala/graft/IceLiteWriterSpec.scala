@@ -11,11 +11,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.icelite.{IceLite, ParquetStats}
+import graft.icelite.IceLite
+import graft.SparkTestBase.dirStatReference
 
 /** IceLite's delta writer against `df.write.parquet` on the same
   * DataFrame: same rows, same schemas (in the files and read back), same
-  * bytes, and manifest stats that equal what the footers and a scan say. */
+  * bytes, and manifest stats — the writer's reports, staged dirs' too —
+  * that equal what a scan and the file listing say. */
 class IceLiteWriterSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -62,10 +64,9 @@ class IceLiteWriterSpec extends AnyFunSuite {
     assert(st.bytes == dataFiles(ref).map(n => new File(ref, n).length()).sum)
     val sorted = (p: String) => spark.read.parquet(p).orderBy("id").collect().toSeq
     assert(sorted(dir) == sorted(ref))
-    // the manifest carries the writer's counts, and they are the footers'
-    assert(st == ParquetStats.dirStat(dir))
-    assert(st.rows == 400 && st.rows == spark.read.parquet(dir).count())
-    assert(st.bytes == dataFiles(dir).map(n => new File(dir, n).length()).sum)
+    // the manifest carries the writer's counts, and they are the scan's
+    // and the file listing's
+    assert(st == dirStatReference(dir) && st.rows == 400)
     // one file per non-empty partition: the two empty ones opened nothing
     val nonEmpty = df.rdd.mapPartitions(it => Iterator(it.nonEmpty)).collect().count(identity)
     assert(nonEmpty == 4 && st.files == nonEmpty)
@@ -80,9 +81,35 @@ class IceLiteWriterSpec extends AnyFunSuite {
     val dir = store.stage("t", sample)
     val names = new File(dir).listFiles().map(_.getName).filterNot(_.startsWith(".")).toSeq
     assert(names.size == 4 && names.forall(_.startsWith("part-")), names)
+    val st = store.stagedStat(dir)
+    assert(st == dirStatReference(dir))
     val id = store.commit(Seq.empty, staged = Seq("t" -> dir))
-    assert(store.manifest(id).stats("t") == Seq(ParquetStats.dirStat(dir)))
-    assert(store.tableStat("t").contains((400L, ParquetStats.dirStat(dir).bytes, 4L)))
+    assert(store.manifest(id).stats("t") == Seq(st))
+    assert(store.tableStat("t").contains((400L, st.bytes, 4L)))
+    // the commit took the record: the dir cannot be committed a second time
+    intercept[IllegalArgumentException](store.stagedStat(dir))
+    // a discarded dir leaves neither a record nor files
+    val dropped = store.stage("t", sample)
+    store.discard(dropped)
+    intercept[IllegalArgumentException](store.stagedStat(dropped))
+    assert(!new File(dropped).exists())
+  }
+
+  test("commit refuses a dir this store did not stage, names it, and leaves _head unchanged") {
+    val root = tmp("icelite")
+    val store = new IceLite(root)
+    val head = store.commit(Seq("t" -> sample))
+    // a parquet dir under the table written without the store, and one
+    // staged by another IceLite over the same root
+    val plain = new File(root, "t/splain").getPath
+    sample.write.parquet(plain)
+    val other = new IceLite(root).stage("t", sample)
+    for (dir <- Seq(plain, other)) {
+      val e = intercept[IllegalArgumentException](store.commit(Seq.empty, staged = Seq("t" -> dir)))
+      assert(e.getMessage.contains(dir))
+      assert(store.currentSnapshotId.contains(head))
+      assert(store.manifest(head).tables("t").size == 1)
+    }
   }
 
   test("an all-empty delta is one schema-only file that reads back without a schema") {
@@ -90,7 +117,7 @@ class IceLiteWriterSpec extends AnyFunSuite {
     val empty = sample.filter($"id" < 0)
     val id = store.commit(Seq("t" -> empty))
     val Seq(st) = store.manifest(id).stats("t")
-    assert(st.rows == 0 && st.files == 1 && st.bytes > 0 && st == ParquetStats.dirStat(st.dir))
+    assert(st.rows == 0 && st.files == 1 && st.bytes > 0 && st == dirStatReference(st.dir))
     val back = store.read(spark, "t")
     assert(back.isEmpty)
     val ref = new File(tmp("ref"), "t").toString
@@ -117,13 +144,26 @@ class IceLiteWriterSpec extends AnyFunSuite {
     val id = store.commit(Seq("t" -> rows))
     assert(!new File(stray).exists(), "stray part file survived the commit")
     val st = store.manifest(id).stats("t").last
-    assert(st == ParquetStats.dirStat(target.getPath) && st.rows == 20)
+    assert(st == dirStatReference(target.getPath) && st.rows == 20)
     assert(store.read(spark, "t").filter($"v" === "stray").isEmpty)
     assert(store.read(spark, "t").count() == 21)
     // an attempt still running when the job ended can only leave a hidden
     // file, which neither readers nor the stats see
     Files.copy(java.nio.file.Paths.get(srcFile), target.toPath.resolve("_part-00009-late.parquet"))
-    assert(store.read(spark, "t").count() == 21 && ParquetStats.dirStat(target.getPath) == st)
+    assert(store.read(spark, "t").count() == 21 && dirStatReference(target.getPath) == st)
+  }
+
+  test("a schema-bound IceLite read of a committed table runs no Spark job") {
+    val store = new IceLite(tmp("icelite"))
+    val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    store.commit(Seq("a" -> df))
+    store.commit(Seq("a" -> df))
+    // the control: without a schema the read infers one, with a job
+    assert(SparkTestBase.jobsDuring(store.read(spark, "a")) >= 1)
+    var bound: DataFrame = null
+    assert(SparkTestBase.jobsDuring { bound = store.read(spark, "a", None, Some(df.schema)) } == 0)
+    assert(bound.schema.fieldNames.toSeq == Seq("id", "v"))
+    assert(bound.count() == 200)
   }
 
   private def rowEncoder = org.apache.spark.sql.Encoders.row(StructType.fromDDL("id BIGINT, v STRING"))

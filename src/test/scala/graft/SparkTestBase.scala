@@ -21,6 +21,16 @@ object SparkTestBase {
     s
   }
 
+  /** A data dir's stats from outside IceLite — a scan's row count, and the
+    * number and summed lengths of its `part-*.parquet` files: the
+    * reference every manifest stat must equal. */
+  def dirStatReference(dir: String): graft.icelite.IceLite.DirStat = {
+    val parts = new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    graft.icelite.IceLite.DirStat(dir, spark.read.parquet(dir).count(),
+      parts.map(_.length()).sum, parts.size)
+  }
+
   /** Spark jobs started while `body` runs, from any driver thread (IceLite
     * commits write from threads of their own). Two sentinel jobs, tagged
     * through a local property, bracket `body`; the listener bus delivers
